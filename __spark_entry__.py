@@ -42,7 +42,7 @@ def _pages(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = max(int(_sf_of(sf_dir) * 100_000), 10)
     key = f"v{datagen.DATAGEN_VERSION}_sf_{n_docs}"
     if key not in _PAGES_CACHE:
-        path = os.path.join("/tmp", "gocrd_pages_cache", key)
+        path = os.path.join(datagen.cache_dir("gocrd_pages_cache"), key)
         marker = os.path.join(path, "_SUCCESS")
         if not os.path.exists(marker):
             datagen.write_pages(spark, n_docs, path)

@@ -52,10 +52,10 @@ def _cpu_ticks() -> tuple[int, int]:
 
 
 def _bench_pages_path(n_docs: int) -> str:
-    from gocrd_spark.datagen import DATAGEN_VERSION
+    from gocrd_spark.datagen import DATAGEN_VERSION, cache_dir
 
     return os.path.join(
-        "/tmp", "gocrd_pages_cache", f"bench_v{DATAGEN_VERSION}_{n_docs}"
+        cache_dir("gocrd_pages_cache"), f"bench_v{DATAGEN_VERSION}_{n_docs}"
     )
 
 

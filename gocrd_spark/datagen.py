@@ -25,6 +25,7 @@ from __future__ import annotations
 import datetime
 import os
 import random
+import tempfile
 from typing import Iterator, Optional
 
 import pandas as pd
@@ -45,6 +46,13 @@ WORDS = [
 
 KANT_URL = "https://crawl.test/kant-0020"
 METS_URL = "https://crawl.test/mets-0001"
+
+
+def cache_dir(name: str) -> str:
+    """Directory of one generated-input cache (pages, media, PDFs) under
+    the system temp root, so ``TMPDIR`` moves every cache at once."""
+    return os.path.join(tempfile.gettempdir(), name)
+
 
 def _fixture(name: str) -> bytes:
     """Reference fixture bytes, shipped as package data under

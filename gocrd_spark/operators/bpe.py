@@ -261,9 +261,13 @@ def bpe_vocab(
     O(corpus)."""
     from pyspark.sql import Window
 
+    # == explode's rows; a plain explode of the bound column gets an
+    # inferred size filter pushed below the projection (re-splits words)
     alpha = (
         _word_table(docs, lowercase)
-        .select(F.explode("symbols").alias("token"))
+        .select(F.posexplode_outer("symbols").alias("_pos", "token"))
+        .filter(F.col("_pos").isNotNull())
+        .select("token")
         .distinct()
     )
     w = Window.orderBy("token")

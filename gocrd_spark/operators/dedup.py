@@ -835,14 +835,19 @@ def contamination_flags(
     scan joins map-side with no corpus shuffle; output is one row per
     contaminated (doc_id, benchmark_id) pair with the shared-gram count.
     """
-    doc_sh = shingle_docs(docs, n).select(
-        "doc_id", F.explode("shingles").alias("shingle")
-    )
-    bench_sh = shingle_docs(benchmarks, n).select(
-        F.col("doc_id").alias("benchmark_id"), F.explode("shingles").alias("shingle")
-    )
+    def shingle_rows(df: DataFrame, id_col: str) -> DataFrame:
+        # == explode's rows; a plain explode of the bound column gets an
+        # inferred size filter pushed below the projection (re-runs the
+        # shingle chain)
+        sh = shingle_docs(df, n).select(
+            F.col("doc_id").alias(id_col),
+            F.posexplode_outer("shingles").alias("_pos", "shingle"),
+        )
+        return sh.filter(F.col("_pos").isNotNull()).drop("_pos")
+
     return (
-        doc_sh.join(F.broadcast(bench_sh), "shingle")
+        shingle_rows(docs, "doc_id")
+        .join(F.broadcast(shingle_rows(benchmarks, "benchmark_id")), "shingle")
         .filter(F.col("doc_id") != F.col("benchmark_id"))
         .groupBy("doc_id", "benchmark_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
@@ -1379,10 +1384,16 @@ def paragraph_dedup(docs: DataFrame, chunk_words: int = 8) -> DataFrame:
     chunked = toks.select(
         "doc_id", _chunks_of_tokens(F.col("_toks"), chunk_words).alias("chunks")
     )
-    # narrow: longs only past this projection
-    occ = chunked.select(
-        "doc_id", F.posexplode("chunks").alias("chunk_idx", "chunk")
-    ).select("doc_id", "chunk_idx", F.xxhash64("chunk").alias("h"))
+    # narrow: longs only past this projection. == posexplode's rows; a
+    # plain posexplode of `chunks` gets an inferred size filter pushed
+    # below the projection (re-runs the chunk chain)
+    occ = (
+        chunked.select(
+            "doc_id", F.posexplode_outer("chunks").alias("chunk_idx", "chunk")
+        )
+        .filter(F.col("chunk_idx").isNotNull())
+        .select("doc_id", "chunk_idx", F.xxhash64("chunk").alias("h"))
+    )
     firsts = occ.groupBy("h").agg(
         F.min(F.struct("doc_id", "chunk_idx")).alias("first_occ")
     )

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..datagen import cache_dir
+
 FEATURE_DIM = 16
 
 FEATURES_SCHEMA = (
@@ -207,7 +209,7 @@ def media_parquet_path(n: int, seed: int = 42) -> str:
     import os
 
     return os.path.join(
-        "/tmp", "gocrd_media_cache", f"v{MEDIA_VERSION}_s{seed}_n{n}.parquet"
+        cache_dir("gocrd_media_cache"), f"v{MEDIA_VERSION}_s{seed}_n{n}.parquet"
     )
 
 
@@ -479,7 +481,8 @@ def ensure_ppm_parquet(n: int, seed: int = 42) -> str:
     import pyarrow.parquet as pq
 
     path = os.path.join(
-        "/tmp", "gocrd_media_cache", f"ppm_v{PPM_MEDIA_VERSION}_s{seed}_n{n}.parquet"
+        cache_dir("gocrd_media_cache"),
+        f"ppm_v{PPM_MEDIA_VERSION}_s{seed}_n{n}.parquet",
     )
     if not os.path.exists(path):
         os.makedirs(os.path.dirname(path), exist_ok=True)

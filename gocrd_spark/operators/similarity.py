@@ -300,6 +300,12 @@ def _dist2(a: Column, b: Column) -> Column:
     )
 
 
+def _check_carry(carry: tuple[str, ...], generated: set[str]) -> None:
+    """Raise at the call site, not in the analyzer, on a name clash."""
+    if generated.intersection(carry):
+        raise ValueError(f"carry {carry} collides with generated {sorted(generated)}")
+
+
 def assign_cells(
     embeddings: DataFrame,
     centroids: DataFrame,
@@ -320,6 +326,7 @@ def assign_cells(
     shuffle join to re-attach it — carrying it is free in the narrow
     plan and removes that join outright (one Exchange per consumer,
     two per Lloyd round)."""
+    _check_carry(carry, {"cell", "cands", "vec_id"})
     cands = centroids.agg(
         F.array_sort(
             F.collect_list(F.struct(F.col("cell").alias("code"), "centroid"))
@@ -915,6 +922,7 @@ def _assign_codes(
     duplication. Returns (vec_id, sub, code, *carry); ``carry`` columns
     of ``subv`` (the subvector itself, a riding cell id) pass through
     unchanged so consumers don't re-join them on (vec_id, sub)."""
+    _check_carry(carry, {"code", "cands", "sub", "vec_id"})
     return subv.join(F.broadcast(_codebook_rows(codebooks)), "sub").select(
         "vec_id",
         "sub",

@@ -301,13 +301,14 @@ def canonical_dedup(
     target is the SELF-CANONICAL capture if one was crawled (url ==
     target), else the latest capture, lowest url on ties.
 
-    Scale shape mirrors url_dedup: one groupBy on target whose winner
-    is a map-side-combinable min of a (not_self, -ts, url) struct —
-    the shuffle carries (target, small struct), never page content —
-    then a key join to label every input row. At crawl scale the
-    canonical graph is shallow (pages point at one canonical target,
-    depth 1 by construction), so no iteration is needed — unlike
-    dedup_clusters there is no transitive closure to chase.
+    Scale shape: ONE window over target whose winner is the min of a
+    (not_self, -ts, url) struct — the shuffle carries (url, target, ts),
+    never page content, and the input (typically the page_metadata
+    kernel's output) is read once; a groupBy plus a join back would
+    read it twice. At crawl scale the canonical graph is shallow (pages
+    point at one canonical target, depth 1 by construction), so no
+    iteration is needed — unlike dedup_clusters there is no transitive
+    closure to chase.
 
     Returns every input row labeled: (url, target, keep BIGINT 0/1).
     """
@@ -317,25 +318,17 @@ def canonical_dedup(
         target.alias("target"),
         F.col(ts_col).alias("_ts"),
     )
-    winners = (
-        keyed.groupBy("target")
-        .agg(
-            F.min(
-                F.struct(
-                    F.when(F.col("_url") == F.col("target"), 0)
-                    .otherwise(1)
-                    .alias("not_self"),
-                    (-F.coalesce(F.col("_ts"), F.lit(0))).alias("neg_ts"),
-                    F.col("_url").alias("url"),
-                )
-            ).alias("w")
+    winner = F.min(
+        F.struct(
+            F.when(F.col("_url") == F.col("target"), 0).otherwise(1).alias("not_self"),
+            (-F.coalesce(F.col("_ts"), F.lit(0))).alias("neg_ts"),
+            F.col("_url").alias("url"),
         )
-        .select("target", F.col("w.url").alias("_win_url"))
-    )
-    return keyed.join(winners, "target", "left").select(
+    ).over(Window.partitionBy("target"))
+    return keyed.select(
         F.col("_url").alias(url_col),
         "target",
-        F.when(F.col("_url") == F.col("_win_url"), F.lit(1))
+        F.when(F.col("_url") == winner["url"], F.lit(1))
         .otherwise(F.lit(0))
         .cast("long")
         .alias("keep"),

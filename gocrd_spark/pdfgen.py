@@ -25,7 +25,7 @@ from __future__ import annotations
 import random
 import zlib
 
-# bump when synth_pdf/_block_content/make_pdf_row change: the /tmp corpus
+# bump when synth_pdf/_block_content/make_pdf_row change: the corpus
 # cache AND the spec-derived golden must move together (a stale cached
 # corpus against a fresh golden shows up as spurious oracle failures)
 # v2: xref-stream/ObjStm layout for every doc_id % 3 == 1
@@ -300,7 +300,9 @@ def ensure_pdf_parquet(n: int) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    path = os.path.join("/tmp", "gocrd_pdf_cache", f"v{PDFGEN_VERSION}_n{n}.parquet")
+    from .datagen import cache_dir
+
+    path = os.path.join(cache_dir("gocrd_pdf_cache"), f"v{PDFGEN_VERSION}_n{n}.parquet")
     if not os.path.exists(path):
         os.makedirs(os.path.dirname(path), exist_ok=True)
         rows = [make_pdf_row(i)[0] for i in range(n)]

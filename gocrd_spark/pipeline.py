@@ -713,16 +713,15 @@ def extraction_report(out: DataFrame) -> DataFrame:
     """Extraction health summary — the monitoring table an extraction
     job publishes next to its output: one row per error class (NULL =
     extracted OK) with page counts and exact integer ppm shares.
-    One key-only groupBy; the total is a 1-row broadcast scalar.
+    One key-only groupBy; the total is a window sum over its few rows,
+    so the input (the extraction kernel) is read once.
     Input is extract_pages shape (needs the ``error`` column)."""
-    tot = out.agg(F.count(F.lit(1)).cast("long").alias("t"))
     return (
         out.groupBy("error")
         .agg(F.count(F.lit(1)).cast("long").alias("n_pages"))
-        .crossJoin(F.broadcast(tot))
         .select(
             "error",
             "n_pages",
-            F.expr("(1000000 * n_pages) div t").alias("share_ppm"),
+            F.expr("(1000000 * n_pages) div sum(n_pages) over ()").alias("share_ppm"),
         )
     )

@@ -2,20 +2,15 @@
 (FIXTURES.md §2-§3)."""
 
 import hashlib
-import os
 
+from gocrd_spark.datagen import _fixture
 from gocrd_spark.extract import extract_document, mets_records, sniff_kind
-
-HERE = os.path.dirname(__file__)
-KANT = os.path.join(HERE, "fixtures", "kant_aufklaerung_1784_0020.xml")
-METS = os.path.join(HERE, "fixtures", "mets.xml")
 
 GOLDEN_SHA = "7bac7349cf86baac9834073fbfd7e589efa9d716e28578d6940362a02c7ec065"
 
 
 def _kant_bytes() -> bytes:
-    with open(KANT, "rb") as fh:
-        return fh.read()
+    return _fixture("kant_aufklaerung_1784_0020.xml")
 
 
 def test_golden_text_byte_identity():
@@ -75,24 +70,20 @@ def test_malformed_document_yields_error_row():
 
 
 def test_non_page_document():
-    with open(METS, "rb") as fh:
-        mets_bytes = fh.read()
-    result = extract_document(mets_bytes)
+    result = extract_document(_fixture("mets.xml"))
     assert result["text"] is None
     assert "not a PAGE-XML" in result["error"]
 
 
 def test_sniff_kind():
     assert sniff_kind(_kant_bytes()) == "page"
-    with open(METS, "rb") as fh:
-        assert sniff_kind(fh.read()) == "mets"
+    assert sniff_kind(_fixture("mets.xml")) == "mets"
     assert sniff_kind(b"<html/>") == "other"
     assert sniff_kind(b"\x00\x01 not xml") == "other"
 
 
 def test_mets_records_flat_rows():
-    with open(METS, "rb") as fh:
-        data = fh.read()
+    data = _fixture("mets.xml")
     rows = mets_records(data)
     assert len(rows) == 3
     assert rows[1] == {

@@ -3,7 +3,6 @@ byte-identical results to the DOM reference implementation on goldens,
 synthetic corpus rows, and hypothesis-generated documents."""
 
 import hashlib
-import os
 
 from hypothesis import given, settings
 
@@ -11,10 +10,6 @@ from gocrd_spark import datagen
 from gocrd_spark.extract import extract_document
 from gocrd_spark.fastextract import extract_document_fast
 from tests.test_properties import page_doc
-
-KANT = os.path.join(
-    os.path.dirname(__file__), "fixtures", "kant_aufklaerung_1784_0020.xml"
-)
 
 
 def _assert_same(data: bytes) -> None:
@@ -29,8 +24,7 @@ def _assert_same(data: bytes) -> None:
 
 
 def test_golden_fixture():
-    with open(KANT, "rb") as fh:
-        data = fh.read()
+    data = datagen._fixture("kant_aufklaerung_1784_0020.xml")
     fast = extract_document_fast(data)
     assert (
         hashlib.sha256(fast["text"].encode()).hexdigest()

@@ -1,5 +1,6 @@
 """HTML boilerplate-strip extractor + document-kind routing + PDF stub."""
 
+from gocrd_spark.datagen import _fixture
 from gocrd_spark.extract import extract_any_document, extract_document
 from gocrd_spark.htmlextract import extract_html
 from gocrd_spark.pdfextract import extract_pdf, parse_pdf_layout
@@ -134,24 +135,14 @@ class TestHtmlFuzz:
 
 class TestRouting:
     def test_page_xml_routes_to_gocrd_kernel(self):
-        import os
-
-        kant = os.path.join(
-            os.path.dirname(__file__), "fixtures", "kant_aufklaerung_1784_0020.xml"
-        )
-        with open(kant, "rb") as fh:
-            data = fh.read()
+        data = _fixture("kant_aufklaerung_1784_0020.xml")
         assert extract_any_document(data) == extract_document(data)
 
     def test_html_routes_to_boilerplate_strip(self):
         assert extract_any_document(ARTICLE) == extract_html(ARTICLE)
 
     def test_mets_routes_to_error(self):
-        import os
-
-        mets = os.path.join(os.path.dirname(__file__), "fixtures", "mets.xml")
-        with open(mets, "rb") as fh:
-            result = extract_any_document(fh.read())
+        result = extract_any_document(_fixture("mets.xml"))
         assert result["text"] is None and "METS manifest" in result["error"]
 
     def test_garbage_routes_to_error(self):

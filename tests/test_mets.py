@@ -1,18 +1,15 @@
 """1:1 port of the reference's METS tests (mets/mets_test.go) against the
 same vendored fixture."""
 
-import os
-
 import pytest
 
+from gocrd_spark.datagen import _fixture
 from gocrd_spark.mets import FLocat, File, Match, Mets
-
-FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "mets.xml")
 
 
 @pytest.fixture(scope="module")
 def mets() -> Mets:
-    return Mets.open(FIXTURE)
+    return Mets.from_bytes(_fixture("mets.xml"))
 
 
 # mets/mets_test.go:8-30

@@ -1191,6 +1191,27 @@ class TestSimilarity:
             assert centroid == pytest.approx(expected, abs=1e-6)
 
 
+@pytest.mark.parametrize(
+    "fn,carry",
+    [
+        ("assign_cells", ("embedding", "cell")),
+        ("assign_cells", ("cands",)),
+        ("assign_cells", ("vec_id",)),
+        ("_assign_codes", ("subvec", "code")),
+        ("_assign_codes", ("cands",)),
+        ("_assign_codes", ("sub",)),
+        ("_assign_codes", ("vec_id",)),
+    ],
+)
+def test_carry_collision_fails_at_entry(fn, carry):
+    """A carried column named like a generated one raises before any
+    DataFrame is touched (None stands in for both inputs)."""
+    from gocrd_spark.operators import similarity
+
+    with pytest.raises(ValueError, match="collide"):
+        getattr(similarity, fn)(None, None, carry=carry)
+
+
 class TestIvfIndex:
     def test_build_probe_parity_resume(self, spark, emb, tmp_path):
         """Durable-index results == per-call topk_ivf at the same params;

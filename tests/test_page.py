@@ -2,20 +2,15 @@
 the same vendored fixture, plus edge cases for the xmlpath-subset
 semantics (SURVEY.md §1.3)."""
 
-import os
-
 import pytest
 
+from gocrd_spark.datagen import _fixture
 from gocrd_spark.page import Line, Match, Page, Rect, Region, Word
-
-FIXTURE = os.path.join(
-    os.path.dirname(__file__), "fixtures", "kant_aufklaerung_1784_0020.xml"
-)
 
 
 @pytest.fixture(scope="module")
 def page() -> Page:
-    return Page.open(FIXTURE)
+    return Page.from_bytes(_fixture("kant_aufklaerung_1784_0020.xml"))
 
 
 # page/page_test.go:9-36 — ReadingOrder membership defines visibility

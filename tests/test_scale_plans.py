@@ -467,9 +467,9 @@ class TestRound5Plans:
         assert "MapInPandas" in plan
 
     def test_canonical_dedup_shuffles_keys_not_content(self, spark):
-        """canonical_dedup's winner agg must partial-aggregate map-side
-        (struct-min combine before the Exchange) and its shuffles carry
-        only (target, struct) — no page/html column ever shuffles."""
+        """canonical_dedup's winner is a struct-min window over target
+        and its shuffle carries only (url, target, ts) — no page/html
+        column ever shuffles."""
         from gocrd_spark.operators.urls import canonical_dedup
 
         df = spark.createDataFrame(
@@ -477,7 +477,7 @@ class TestRound5Plans:
             "url string, canonical_url string, warc_ts_epoch long",
         ).withColumn("html", F.lit(b"payload-bytes-never-shuffle"))
         plan = _plan(canonical_dedup(df))
-        assert "partial_min" in plan  # map-side combine of the winner struct
+        assert "Window" in plan and "SortMergeJoin" not in plan
         for block in plan.split("+-"):
             if "Exchange" in block.splitlines()[0]:
                 assert "html" not in block
@@ -566,3 +566,57 @@ class TestRedirectResolvePlan:
             head = block.splitlines()[0] if block.splitlines() else ""
             if ") Exchange" in head and "hashpartitioning(cur#" in block:
                 assert "src#" not in block and "dst#" not in block, block
+
+
+def _optimized(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+class TestGeneratorInputsEvaluatedOnce:
+    def test_no_filter_reruns_a_lambda_chain(self, spark, docs):
+        """On the default session (InferFiltersFromGenerate active), no
+        Filter may evaluate a higher-order-function chain: a filter the
+        rule infers on a bound generator input is pushed below its
+        projection and re-runs the tokenize/shingle/chunk chain."""
+        from gocrd_spark.operators.bpe import bpe_vocab
+        from gocrd_spark.operators.dedup import contamination_flags, paragraph_dedup
+
+        excluded = spark.conf.get("spark.sql.optimizer.excludedRules", "") or ""
+        assert "InferFiltersFromGenerate" not in excluded
+        bench = docs.filter(F.col("doc_id") % 50 == 0)
+        for df in (
+            contamination_flags(docs, bench, n=13),
+            paragraph_dedup(docs, chunk_words=8),
+            bpe_vocab(docs, [(0, "e", "r</w>")]),
+        ):
+            plan = _optimized(df)
+            filters = [
+                line for line in plan.splitlines()
+                if line.lstrip(" :+-|").startswith("Filter")
+            ]
+            assert not [f for f in filters if "lambdafunction" in f], plan
+
+
+class TestSingleKernelPass:
+    """The kernel output feeds one consumer: a second reader (a join
+    back, a cross-joined total) would run the Python kernel twice. The
+    pages come from the driver, so the only MapInPandas is the kernel."""
+
+    @staticmethod
+    def _pages(spark):
+        from gocrd_spark import datagen
+
+        return spark.createDataFrame(datagen.pages_pdf(50), schema=datagen.PAGES_SCHEMA)
+
+    def test_canonical_dedup_runs_page_metadata_once(self, spark):
+        from gocrd_spark.operators.urls import canonical_dedup
+        from gocrd_spark.pipeline import page_metadata
+
+        plan = _plan(canonical_dedup(page_metadata(self._pages(spark))))
+        assert plan.count("MapInPandas") == 1, plan
+
+    def test_extraction_report_runs_the_kernel_once(self, spark):
+        from gocrd_spark.pipeline import extract_pages, extraction_report
+
+        plan = _plan(extraction_report(extract_pages(self._pages(spark))))
+        assert plan.count("MapInPandas") == 1, plan

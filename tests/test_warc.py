@@ -7,6 +7,8 @@ import hashlib
 
 import pytest
 
+from gocrd_spark.datagen import _fixture
+
 # hand-written per ISO 28500 — NOT produced by write_warc, so reader
 # bugs cannot be masked by matching writer bugs
 _SPEC_FIXTURE = (
@@ -178,7 +180,7 @@ class TestWarcSparkSurface:
         from gocrd_spark.pipeline import extract_pages
         from gocrd_spark.warc import write_warc
 
-        kant = open("tests/fixtures/kant_aufklaerung_1784_0020.xml", "rb").read()
+        kant = _fixture("kant_aufklaerung_1784_0020.xml")
         shard = write_warc(
             [
                 {
@@ -242,7 +244,7 @@ class TestWarcMixedShard:
         from gocrd_spark.pipeline import extract_pages
         from gocrd_spark.warc import warc_revisits, warc_to_pages, write_warc
 
-        kant = open("tests/fixtures/kant_aufklaerung_1784_0020.xml", "rb").read()
+        kant = _fixture("kant_aufklaerung_1784_0020.xml")
         shard = write_warc(
             [
                 {
@@ -404,7 +406,7 @@ class TestWarcJobPath:
         from gocrd_spark.pipeline import run_extract_job
         from gocrd_spark.warc import write_warc
 
-        kant = open("tests/fixtures/kant_aufklaerung_1784_0020.xml", "rb").read()
+        kant = _fixture("kant_aufklaerung_1784_0020.xml")
         shard_dir = tmp_path / "shards"
         shard_dir.mkdir()
         for i in range(3):
