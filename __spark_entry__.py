@@ -799,15 +799,12 @@ def _q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from gocrd_spark.operators.dedup import (
         _pairs_from_banded,
-        _register_persisted,
         band_hash64,
         simhash64,
     )
 
     docs = _docs(spark, sf_dir)
-    # bounded module registry (unpersists old entries beyond the cap)
-    # — a bare persist() would pin blocks for the whole sweep
-    sigs = _register_persisted(simhash64(docs, n=2).persist())
+    sigs = simhash64(docs, n=2).localCheckpoint(eager=False)
     exact = (
         sigs.alias("a")
         .crossJoin(sigs.alias("b"))
@@ -821,12 +818,11 @@ def _q_simhash_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("hamming") <= 3)
     )
-    # banded pairs DERIVED from the same persisted signature table
+    # banded pairs DERIVED from the same pinned signature table
     # (band_hash64 + _pairs_from_banded IS simhash_near_dups' pipeline
     # after simhash64): byte-identical pairs, but the expensive
     # shingle+bit-vote signature stage runs ONCE for both the exact and
-    # the banded side instead of once each — and the former second
-    # persist no longer evicts ``sigs`` from the registry mid-query.
+    # the banded side instead of once each.
     banded = _pairs_from_banded(band_hash64(sigs, 3), 3, 10_000).select(
         "doc_a", "doc_b", F.lit(1).alias("_hit")
     )

@@ -103,16 +103,15 @@ def training_corpus(
     seed: str = "mix1",
     budget_tokens: int = 2048,
     min_quality: float = 0.3,
-    stage_cache: bool = True,
     star_bucket: int | None = None,
 ) -> DataFrame:
     """Run the full cleaning chain over ``docs`` (doc_id, text, source).
     Returns the training-ready corpus:
     (doc_id, source, text, n_tokens, shard_id).
 
-    ``stage_cache`` (default True) localCheckpoints every survivor set
-    consumed by multiple later stages (stages 1-5): without the cut,
-    every consumer of stage2 re-executes the ENTIRE upstream chain —
+    Every survivor set consumed by multiple later stages (stages 1-5)
+    is pinned with a lazy localCheckpoint: without the cut, every
+    consumer of stage2 re-executes the ENTIRE upstream chain —
     MinHash LSH, exact verify, connected components — once more
     (measured 4x the whole-chain wall at sf0.1: 47-52 s -> 11.5-12.5 s,
     identical output), and un-cut stages 3-5 compound the replay of
@@ -120,8 +119,7 @@ def training_corpus(
     static plan carried 138 Exchanges before stages 3-5 were cut).
     Cost: executor storage for the (id, text, source) survivor tables —
     the same corpus-sized materialization a production pipeline pays
-    anyway by writing stage outputs to durable storage between stages;
-    pass False to trade recompute for zero storage.
+    anyway by writing stage outputs to durable storage between stages.
 
     ``star_bucket`` forwards the mega-bucket star valve to the MinHash
     candidate stage (see minhash_candidates): at crawl scale a
@@ -147,9 +145,9 @@ def training_corpus(
 
     # 1. exact dedup: canonical doc per normalized-text hash
     exact_keep = exact_dedup(docs).select("doc_id")
-    stage1 = docs.join(exact_keep, "doc_id", "left_semi")
-    if stage_cache:
-        stage1 = stage1.localCheckpoint(eager=False)
+    stage1 = docs.join(exact_keep, "doc_id", "left_semi").localCheckpoint(
+        eager=False
+    )
 
     # 2. near-dup clusters -> keep the canonical of each cluster.
     # Banding DERIVED from the threshold (choose_bands) — the default
@@ -176,25 +174,23 @@ def training_corpus(
         star_bucket=star_bucket,
     )
     keep2 = dedup_clusters(stage1, pairs).filter(F.col("keep") == 1).select("doc_id")
-    stage2 = stage1.join(keep2, "doc_id", "left_semi")
-    if stage_cache:
-        stage2 = stage2.localCheckpoint(eager=False)
+    stage2 = stage1.join(keep2, "doc_id", "left_semi").localCheckpoint(
+        eager=False
+    )
 
     # 3. paragraph-level dedup: rewrite text, drop docs left empty
     rewritten = paragraph_dedup(stage2, chunk_words=chunk_words).filter(
         F.col("n_kept") > 0
     )
+    # consumed by quality_score AND the stage4 semi-join: un-cut,
+    # paragraph_dedup (a full chunk-shingle pass over the corpus)
+    # replays once per consumer, and the replay count COMPOUNDS
+    # through stages 4-6 (each later stage is itself consumed
+    # twice) — the static plan showed 138 Exchanges for a 6-stage
+    # chain before stages 3-5 were cut (plans/r06).
     stage3 = stage2.select("doc_id", "source").join(
         rewritten.select("doc_id", F.col("text_dedup").alias("text")), "doc_id"
-    )
-    if stage_cache:
-        # consumed by quality_score AND the stage4 semi-join: un-cut,
-        # paragraph_dedup (a full chunk-shingle pass over the corpus)
-        # replays once per consumer, and the replay count COMPOUNDS
-        # through stages 4-6 (each later stage is itself consumed
-        # twice) — the static plan showed 138 Exchanges for a 6-stage
-        # chain before stages 3-5 were cut (plans/r06).
-        stage3 = stage3.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     # 4. quality gate over the REWRITTEN text. The gate compares at 6dp
     # (the suite's fixed-point convention): quality is a chain of double
@@ -204,21 +200,19 @@ def training_corpus(
     q_keep = quality_score(stage3).filter(
         F.round(F.col("quality"), 6) >= min_quality
     ).select("doc_id")
-    stage4 = stage3.join(q_keep, "doc_id", "left_semi")
-    if stage_cache:
-        # consumed by source_weighted_sample AND the stage5 semi-join
-        stage4 = stage4.localCheckpoint(eager=False)
+    # consumed by source_weighted_sample AND the stage5 semi-join
+    stage4 = stage3.join(q_keep, "doc_id", "left_semi").localCheckpoint(
+        eager=False
+    )
 
     # 5. domain reweighting
     sampled = source_weighted_sample(
         stage4, rates or {}, default_rate=default_rate, seed=seed
     )
+    # consumed by pack_shards AND the final join
     stage5 = stage4.join(
         sampled.filter(F.col("keep") == 1).select("doc_id"), "doc_id", "left_semi"
-    )
-    if stage_cache:
-        # consumed by pack_shards AND the final join
-        stage5 = stage5.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
 
     # 6. shard layout of what remains
     shards = pack_shards(stage5, budget_tokens=budget_tokens)

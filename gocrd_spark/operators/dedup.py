@@ -25,74 +25,12 @@ exchange); Jaccard verification joins only candidate pairs.
 
 from __future__ import annotations
 
-import threading
-
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-
-# Recent invocations' persisted signature/shingle tables — a BOUNDED
-# FIFO (at most _SIG_DEPTH pinned tables): one query may legitimately
-# pin several stages at once (e.g. minhash_lsh pins the shingle table
-# AND the banded bucket table; simhash_recall pins signatures while
-# simhash_near_dups pins its banded chunks), so a single-entry registry
-# would evict a table the SAME query still needs mid-execution — the
-# blocks get dropped and silently recomputed (correct but slow; this
-# exact hazard was measured on simhash_recall). Beyond the depth cap,
-# oldest entries unpersist, so a long session's storage stays bounded.
-# Lock-guarded (concurrent driver threads must not pop each other's
-# entry mid-swap). Assumption, documented: a caller EXECUTES each
-# result before building _SIG_DEPTH more — job-scale pipelines should
-# use the durable simhash_signatures() table, which has no coupling.
-_SIG_CACHE: list = []
-_SIG_DEPTH = 4
-_SIG_LOCK = threading.Lock()
-
-
-def _register_persisted(df: DataFrame) -> DataFrame:
-    """Swap ``df`` into the bounded signature cache: pin this entry,
-    unpersist the oldest beyond ``_SIG_DEPTH``. Every persist() in this
-    module's query paths goes through here (simhash/minhash session
-    paths AND the incremental modes), so a long session running many
-    dedup queries keeps the documented bounded-pins invariant.
-
-    Registration is IDEMPOTENT per logical plan (semanticHash): a
-    re-invocation of the same query re-pins the identical plan, and
-    without the dedup the new entry would push the old one out of the
-    FIFO — unpersisting the very blocks Spark's cache manager was about
-    to serve to the new entry (measured: multi-pin queries lost their
-    warm state between back-to-back runs)."""
-    with _SIG_LOCK:
-        try:
-            h = df.semanticHash()
-        except Exception:
-            h = None
-        if h is not None:
-            for hh, cached in _SIG_CACHE:
-                if hh == h and cached.sparkSession is df.sparkSession:
-                    # same plan in the same LIVE session: reuse the
-                    # existing pin. Do NOT unpersist the new duplicate
-                    # — the cache manager keys persisted data by PLAN,
-                    # so dropping the new mark would drop the blocks
-                    # the existing entry is serving (measured: warm
-                    # repeats fell back to full recompute). The session
-                    # identity check matters: multi-session processes
-                    # (volume probes, scaling pairs) rebuild identical
-                    # plans in a NEW session, and returning the old
-                    # session's DataFrame dies with a null-session NPE
-                    # at execution.
-                    return cached
-        _SIG_CACHE.append((h, df))
-        while len(_SIG_CACHE) > _SIG_DEPTH:
-            try:
-                _SIG_CACHE.pop(0)[1].unpersist(blocking=False)
-            except Exception:
-                pass  # session gone / already unpersisted
-    return df
 
 
 def _norm_text(col: Column) -> Column:
@@ -168,14 +106,12 @@ def verify_jaccard_pairs(
     arrays feed BOTH join sides, so they are pinned here regardless:
     un-pinned, the tokenize+shingle chain replays once per side."""
     base = shingles if shingles is not None else shingle_docs(docs, n)
-    sh = _register_persisted(
-        base.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform("shingles", lambda s: F.xxhash64(s))
-            ).alias("shingles"),
-        ).persist()
-    )
+    sh = base.select(
+        "doc_id",
+        F.array_distinct(
+            F.transform("shingles", lambda s: F.xxhash64(s))
+        ).alias("shingles"),
+    ).localCheckpoint(eager=False)
     return (
         candidates.select("doc_a", "doc_b")
         .distinct()
@@ -226,11 +162,9 @@ def ngram_jaccard_pairs(
     sh = shingle_docs(docs, n).withColumn("n_sh", F.size("shingles"))
     # both co-occurrence sides consume the exploded table — pinned so
     # tokenize+shingle runs once, not per side
-    exploded = _register_persisted(
-        sh.select(
-            "doc_id", "n_sh", F.explode("shingles").alias("shingle")
-        ).persist()
-    )
+    exploded = sh.select(
+        "doc_id", "n_sh", F.explode("shingles").alias("shingle")
+    ).localCheckpoint(eager=False)
     a = exploded.select(
         F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
     )
@@ -278,14 +212,12 @@ def containment_pairs(
     or a rare-shingle candidate join; exact mode is the certification
     path the driver oracle pins."""
     if candidates is not None:
-        sh = _register_persisted(
-            shingle_docs(docs, n).select(
-                "doc_id",
-                F.array_distinct(
-                    F.transform("shingles", lambda s: F.xxhash64(s))
-                ).alias("shingles"),
-            ).persist()
-        )
+        sh = shingle_docs(docs, n).select(
+            "doc_id",
+            F.array_distinct(
+                F.transform("shingles", lambda s: F.xxhash64(s))
+            ).alias("shingles"),
+        ).localCheckpoint(eager=False)
         both = (
             candidates.select("doc_a", "doc_b")
             .distinct()
@@ -317,11 +249,9 @@ def containment_pairs(
         ).withColumn("n_sh", F.size("shingles"))
         # both co-occurrence sides consume the exploded shingle table —
         # pinned so tokenize+shingle+hash runs once, not per side
-        exploded = _register_persisted(
-            sh.select(
-                "doc_id", "n_sh", F.explode("shingles").alias("shingle")
-            ).persist()
-        )
+        exploded = sh.select(
+            "doc_id", "n_sh", F.explode("shingles").alias("shingle")
+        ).localCheckpoint(eager=False)
         a = exploded.select(
             F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
         )
@@ -395,10 +325,10 @@ def containment_candidates(
 
     # three consumers (df table, rare-selection join, posting join) —
     # pinned so tokenize+shingle+explode runs once, not per consumer
-    ex = _register_persisted(
+    ex = (
         shingle_docs(docs, n)
         .select("doc_id", F.explode("shingles").alias("shingle"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     # shingles are distinct per doc (shingle_docs), so count(*) IS the
     # document frequency
@@ -495,9 +425,9 @@ def minhash_candidates(
     un-pinned the 32-hash signature fold — the expensive stage —
     replays once per consumer."""
     _guard_banding(num_hashes, bands, allow_quadratic)
-    bands_df = _register_persisted(
-        _minhash_banded(docs, n, num_hashes, bands, shingles=shingles).persist()
-    )
+    bands_df = _minhash_banded(
+        docs, n, num_hashes, bands, shingles=shingles
+    ).localCheckpoint(eager=False)
     if star_bucket is not None:
         sizes = bands_df.groupBy("band", "bucket").agg(
             F.count(F.lit(1)).alias("_sz"), F.min("doc_id").alias("_hub")
@@ -679,9 +609,7 @@ def connected_components(
     tree is deep enough to stack-overflow the driver (measured). The
     checkpoint truncates lineage to the materialized blocks — the label
     table is (long, long) rows, so materialization is the cheap part of
-    every round. (This is the one place in the repo where
-    localCheckpoint beats persist: elsewhere the LogicalRDD blocking
-    codegen matters; here the plan DEPTH is the failure mode.)
+    every round.
 
     ``stats``, if given, receives ``{"rounds": n}`` on convergence —
     observability for the volume probe, not part of the data contract.
@@ -892,8 +820,8 @@ def fuzzy_contamination(
     # ONE pinned shingle pass per side: the banded-signature stage and
     # the exact-verify stage otherwise each re-tokenize + re-shingle
     # their input (the corpus twice — the dominant cost here)
-    sh_docs = _register_persisted(shingle_docs(docs, n).persist())
-    sh_bench = _register_persisted(shingle_docs(benchmarks, n).persist())
+    sh_docs = shingle_docs(docs, n).localCheckpoint(eager=False)
+    sh_bench = shingle_docs(benchmarks, n).localCheckpoint(eager=False)
     bench_bands = _minhash_banded(
         benchmarks, n, num_hashes, bands, shingles=sh_bench
     ).select(F.col("doc_id").alias("benchmark_id"), "band", "bucket")
@@ -1082,7 +1010,7 @@ def _pairs_from_banded(
     chunks: DataFrame, max_hamming: int, max_bucket: int | None
 ) -> DataFrame:
     """Band-bucket self-join + exact hamming filter over a banded
-    signature table (materialized or persisted upstream)."""
+    signature table (pinned or materialized upstream)."""
     if max_bucket is not None:
         ok = (
             chunks.groupBy("band", "key")
@@ -1124,19 +1052,15 @@ def simhash_near_dups(
     quadratically. None disables. Default leaves every tested corpus
     untouched.
 
-    The banded signature table is persisted for the duration of the
-    query: it feeds three consumers (both self-join sides and the
-    bucket-size cap), and without materialization Spark recomputes the
+    The banded signature table is pinned with a lazy localCheckpoint:
+    it feeds three consumers (both self-join sides and the bucket-size
+    cap), and without materialization Spark recomputes the
     shingle+bit-vote pipeline — the expensive part — once per consumer
-    (measured 3x the signature cost at sf0.1; localCheckpoint was tried
-    and is 3-6x slower end-to-end, the LogicalRDD blocks downstream
-    codegen). Cache lifecycle is bounded: registrations go through the
-    module registry (bounded depth-``_SIG_DEPTH`` FIFO, idempotent per
-    plan), so a session running many dedup queries holds a small fixed
-    number of pinned tables — not one per call. At job scale use
-    :func:`simhash_signatures` — a write-once durable table with none
-    of this session-cache coupling."""
-    chunks = _register_persisted(_banded_signatures(docs, n, max_hamming).persist())
+    (measured 3x the signature cost at sf0.1). The pin lives with the
+    returned DataFrame; a second call computes its own. At job scale use
+    :func:`simhash_signatures` — a write-once durable table that any
+    number of later queries read."""
+    chunks = _banded_signatures(docs, n, max_hamming).localCheckpoint(eager=False)
     return _pairs_from_banded(chunks, max_hamming, max_bucket)
 
 
@@ -1145,7 +1069,7 @@ def simhash_signatures(
 ) -> str:
     """Materialize the banded SimHash signature table ONCE at ``path``
     (parquet, columns doc_id/simhash/band/key) — the durable, job-scale
-    replacement for simhash_near_dups' session persist: compute the
+    replacement for simhash_near_dups' in-query pin: compute the
     expensive signatures one time, then any number of near-dup queries
     (today's and next month's incremental runs) join against the table.
 
@@ -1305,9 +1229,9 @@ def simhash_incremental(
             f"{params['max_hamming']}, requested {max_hamming}"
         )
     spark = new_docs.sparkSession
-    new_chunks = _register_persisted(
-        _banded_signatures(new_docs, params["n"], max_hamming).persist()
-    )
+    new_chunks = _banded_signatures(
+        new_docs, params["n"], max_hamming
+    ).localCheckpoint(eager=False)
     old_chunks = _read_sig_table(spark, path)
     all_chunks = old_chunks.unionByName(new_chunks)
     if max_bucket is not None:
@@ -1606,11 +1530,9 @@ def minhash_incremental(
     """
     spark = new_docs.sparkSession
     params = _load_sig_params(spark, path)
-    new_banded = _register_persisted(
-        _minhash_banded(
-            new_docs, params["n"], params["num_hashes"], params["bands"]
-        ).persist()
-    )
+    new_banded = _minhash_banded(
+        new_docs, params["n"], params["num_hashes"], params["bands"]
+    ).localCheckpoint(eager=False)
     all_banded = _read_sig_table(spark, path).unionByName(new_banded)
     candidates = (
         new_banded.alias("x")

@@ -405,9 +405,10 @@ def phash_near_dups(
         .filter(F.col("phash").isNotNull())
         .select(F.col("id").alias("doc_id"), F.col("phash").alias("simhash"))
     )
-    pairs = _pairs_from_banded(
-        band_hash64(sig, max_hamming), max_hamming, max_bucket
-    )
+    # the band table feeds both self-join sides and the bucket cap —
+    # pinned so the phash kernel runs once, not per consumer
+    banded = band_hash64(sig, max_hamming).localCheckpoint(eager=False)
+    pairs = _pairs_from_banded(banded, max_hamming, max_bucket)
     return pairs.select(
         F.col("doc_a").alias("id_a"),
         F.col("doc_b").alias("id_b"),

@@ -254,11 +254,9 @@ def phrase_search(
     never the corpus. Longer phrases chain the same join once per
     additional word.
     """
-    # both phrase-word sides consume the position table — pinned so
-    # tokenize + posexplode runs once, not per side
     pos = docs.select(
         F.col("doc_id"), F.posexplode(_tokens(F.col(text_col))).alias("pos", "term")
-    ).localCheckpoint(eager=False)
+    )
     a = pos.join(
         F.broadcast(phrases), pos["term"] == phrases["w1"]
     ).select("phrase_id", "doc_id", F.col("pos").alias("pos_a"))

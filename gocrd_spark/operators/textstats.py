@@ -202,6 +202,17 @@ def doclen_histogram(docs: DataFrame, bucket_chars: int = 100) -> DataFrame:
 BPE_TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
+def _token_count(token_mode: str) -> tuple[Column, str]:
+    """``(count, pattern)`` for a packing tokenizer: the token count of
+    ``text``, and a regex that ``text`` matches iff the count is > 0."""
+    if token_mode == "whitespace":
+        return F.size(_tokens(F.col("text"))), r"\S"
+    if token_mode == "bpe":
+        toks = F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_PATTERN), 0)
+        return F.size(toks), BPE_TOKEN_PATTERN
+    raise ValueError(f"token_mode must be 'whitespace' or 'bpe', got {token_mode!r}")
+
+
 def token_stats_bpe(docs: DataFrame) -> DataFrame:
     """BPE-ish tokenization (letters-runs | digit-runs | single symbol —
     the GPT-2 pre-tokenizer's shape without the byte-level merges):
@@ -477,16 +488,7 @@ def pack_shards(
     """
     from pyspark.sql import Window
 
-    if token_mode == "whitespace":
-        tok_count = F.size(_tokens(F.col("text")))
-    elif token_mode == "bpe":
-        tok_count = F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_PATTERN), 0)
-        )
-    else:
-        raise ValueError(
-            f"token_mode must be 'whitespace' or 'bpe', got {token_mode!r}"
-        )
+    tok_count, _ = _token_count(token_mode)
     toks = docs.select("doc_id", tok_count.cast("long").alias("n_tokens"))
     if order == "id":
         b = toks.withColumn("bucket", F.floor(F.col("doc_id") / bucket_size))
@@ -569,20 +571,13 @@ def pack_sequences(
     """
     from pyspark.sql import Window
 
-    if token_mode == "whitespace":
-        tok_count = F.size(_tokens(F.col("text")))
-    elif token_mode == "bpe":
-        tok_count = F.size(
-            F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_PATTERN), 0)
-        )
-    else:
-        raise ValueError(
-            f"token_mode must be 'whitespace' or 'bpe', got {token_mode!r}"
-        )
+    # the keep filter reads ``text`` alone: a filter on the projected
+    # count is pushed below the projection and re-runs the tokenizer
+    tok_count, token_re = _token_count(token_mode)
     L = int(seq_len)
     toks = (
-        docs.select("doc_id", tok_count.cast("long").alias("n"))
-        .filter(F.col("n") > 0)
+        docs.filter(F.col("text").rlike(token_re))
+        .select("doc_id", tok_count.cast("long").alias("n"))
         .withColumn("bucket", F.floor(F.col("doc_id") / bucket_size))
     )
     wb = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, -1)
@@ -732,12 +727,13 @@ def chunk_documents(
         F.expr(f"(_n - {L} + {stride} - 1) div {stride}") + 1
     )
     start = F.col("chunk_idx") * stride
+    # empty docs are dropped on ``text`` (a non-space char <=> a token):
+    # a filter on ``_n`` is pushed below the projection and re-runs the
+    # tokenizer
     return (
-        docs.select(
-            "doc_id", _tokens(F.col("text")).alias("_toks")
-        )
+        docs.filter(F.col("text").rlike(r"\S"))
+        .select("doc_id", _tokens(F.col("text")).alias("_toks"))
         .withColumn("_n", F.size(toks).cast("long"))
-        .filter(n > 0)
         .select(
             "doc_id",
             "_toks",
@@ -1137,12 +1133,11 @@ def unigram_logprob(docs: DataFrame) -> DataFrame:
     Returns (doc_id, n_tokens, sum_logprob_e6) for every document with
     at least one token.
     """
-    # toks feeds the corpus LM (tf) AND the per-doc counts (dc); tf
-    # feeds the total AND the LM — pinned so tokenize runs once (the
-    # multiply-consumed-intermediate rule)
+    # tf feeds the total AND the LM — pinned so the term aggregation
+    # runs once
     toks = docs.select(
         "doc_id", F.explode(_tokens(F.lower(F.col("text")))).alias("term")
-    ).localCheckpoint(eager=False)
+    )
     tf = toks.groupBy("term").agg(F.count(F.lit(1)).alias("tf")).localCheckpoint(
         eager=False
     )

@@ -580,6 +580,7 @@ class TestGeneratorInputsEvaluatedOnce:
         projection and re-runs the tokenize/shingle/chunk chain."""
         from gocrd_spark.operators.bpe import bpe_vocab
         from gocrd_spark.operators.dedup import contamination_flags, paragraph_dedup
+        from gocrd_spark.operators.textstats import chunk_documents, pack_sequences
 
         excluded = spark.conf.get("spark.sql.optimizer.excludedRules", "") or ""
         assert "InferFiltersFromGenerate" not in excluded
@@ -588,6 +589,9 @@ class TestGeneratorInputsEvaluatedOnce:
             contamination_flags(docs, bench, n=13),
             paragraph_dedup(docs, chunk_words=8),
             bpe_vocab(docs, [(0, "e", "r</w>")]),
+            chunk_documents(docs, chunk_tokens=64, overlap=16),
+            pack_sequences(docs, seq_len=512),
+            pack_sequences(docs, seq_len=512, token_mode="bpe"),
         ):
             plan = _optimized(df)
             filters = [
@@ -620,3 +624,41 @@ class TestSingleKernelPass:
 
         plan = _plan(extraction_report(extract_pages(self._pages(spark))))
         assert plan.count("MapInPandas") == 1, plan
+
+    def test_phash_near_dups_runs_the_kernel_once(self, spark):
+        """The band table feeds both self-join sides and the bucket
+        cap; pinned, the phash kernel sits behind the pin."""
+        from gocrd_spark.operators.multimodal import (
+            phash_near_dups,
+            synth_ppm_media_pdf,
+        )
+
+        media = spark.createDataFrame(
+            synth_ppm_media_pdf(20), schema="id long, kind string, payload binary"
+        )
+        plan = _plan(phash_near_dups(media, max_hamming=6))
+        assert plan.count("MapInPandas") <= 1, plan
+
+
+class TestDedupPins:
+    def test_pins_are_local_checkpoints(self, spark):
+        """The dedup operators pin their multiply-consumed tables with a
+        lazy localCheckpoint (a Scan ExistingRDD in the plan), never with
+        a session-cached persist (an InMemoryTableScan) that a later
+        call of the same plan would be served from."""
+        from gocrd_spark.operators.dedup import (
+            containment_candidates,
+            minhash_lsh,
+            simhash_near_dups,
+        )
+
+        # an uncached read: the module's ``docs`` fixture is cached
+        docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        for df in (
+            simhash_near_dups(docs, n=2, max_hamming=3),
+            minhash_lsh(docs, threshold=0.5),
+            containment_candidates(docs, n=3, k=5),
+        ):
+            plan = _plan(df)
+            assert "Scan ExistingRDD" in plan, plan
+            assert "InMemoryTableScan" not in plan, plan

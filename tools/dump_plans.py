@@ -48,7 +48,7 @@ NOTES = {
     ),
     "simhash_near_dups": (
         "SimHash: banded equi-join on ~31-bit block-combination keys with "
-        "an InMemoryTableScan of the persisted signature table feeding "
+        "a Scan ExistingRDD of the checkpointed signature table feeding "
         "both join sides and the bucket cap."
     ),
     "ngram_jaccard_pairs": (
