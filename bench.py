@@ -19,8 +19,10 @@ accumulate heap/GC pressure and understate later measurements (observed
 2x swings at local[32]).
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_DOCS (default 100000),
-     SPARK_GRAFT_SCALE_LOW (default 2),
+     SPARK_GRAFT_CPUS (default: the CPUs this process may run on),
+     SPARK_GRAFT_BENCH_DOCS (default 60000),
+     SPARK_GRAFT_SCALE_LOW (default max(1, CPUS // 4), so the pair's
+     high end is at most CPUS),
      SPARK_GRAFT_QUERY_REPEATS (default 2 — per-query best-of-N; single
      samples on this steal-prone VM recorded up to 6.9x phantom
      regressions, see BENCH.md run F).
@@ -163,15 +165,14 @@ def main() -> int:
         return 0
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     # 60k keeps a COLD run (table synthesis + 5 subprocess JVMs + all
     # queries) under ~6 minutes while each timed sample stays >2s
     n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "60000"))
-    # N -> 4N pair. Default 2 -> 8: per-process scaling of the XML-parse
-    # workload on this box is ~1.0 from 2 to 8 workers but memory-bandwidth
-    # bound past ~16 (BENCH.md control data), so 2 -> 8 is the pair where
-    # the engine's scaling is observable.
-    scale_low = int(os.environ.get("SPARK_GRAFT_SCALE_LOW", "2"))
+    # N -> 4N pair, by default the widest one that fits the CPUs (1 -> 4
+    # on 4 CPUs): a pair past the CPU count measures oversubscription,
+    # not scaling.
+    scale_low = int(os.environ.get("SPARK_GRAFT_SCALE_LOW", max(1, cpus // 4)))
     scale_high = 4 * scale_low
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or 0.1)
 

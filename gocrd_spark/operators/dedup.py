@@ -4,10 +4,13 @@ Four tiers, trading recall for cost:
 
 - ``exact_dedup``       — hash-groupBy on normalized text; one shuffle on
                           a 16-byte key. The 100 TB workhorse.
-- ``ngram_jaccard_pairs`` — exact n-gram (shingle) Jaccard similarity via a
-                          shingle-explode + co-occurrence join: scales as
-                          sum of per-shingle df² — fine after LSH
-                          prefiltering, exact on small candidate sets.
+- ``ngram_jaccard_pairs`` — exact n-gram (shingle) Jaccard similarity over
+                          xxhash64 shingle sets, in both modes one
+                          projection of the pair-overlap table
+                          (``_pair_overlap``, shared with containment):
+                          exact mode is a shingle-explode + co-occurrence
+                          join that scales as sum of per-shingle df²;
+                          candidate mode intersects only given pairs.
 - ``minhash_lsh``       — MinHash signatures + banded LSH bucketing, all
                           built-in expressions (xxhash64 per shingle,
                           array_min per permutation); candidates verified
@@ -54,64 +57,96 @@ def _tokens_col(col: Column) -> Column:
     return F.filter(F.split(_norm_text(col), " "), lambda x: x != F.lit(""))
 
 
-def _shingles_of_tokens(t: Column, n: int) -> Column:
-    """Distinct word n-gram shingles of an ALREADY-PROJECTED token
-    column. The token array must be a bound column, not an inline
-    expression: a lambda body referencing an outer expression re-derives
-    it PER ELEMENT (no common-subexpression elimination inside HOF
-    lambdas — the same trap documented at winnowing_fingerprints;
-    measured 7x slower with split/filter inlined here)."""
-    return F.array_distinct(
-        F.when(
-            F.size(t) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(t) - n),
-                lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-            ),
-        ).otherwise(F.array(F.concat_ws(" ", t)))
-    )
+def _ngrams_of_tokens(t: Column, n: int) -> Column:
+    """Word n-grams, repeats kept, of an ALREADY-PROJECTED token column
+    (a doc shorter than ``n`` tokens is one gram of its whole text). The
+    token array must be a bound column, not an inline expression: a
+    lambda body referencing an outer expression re-derives it PER
+    ELEMENT (no common-subexpression elimination inside HOF lambdas —
+    the same trap documented at winnowing_fingerprints; measured 7x
+    slower with split/filter inlined here)."""
+    return F.when(
+        F.size(t) >= n,
+        F.transform(
+            F.sequence(F.lit(0), F.size(t) - n),
+            lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
+        ),
+    ).otherwise(F.array(F.concat_ws(" ", t)))
 
 
 def shingle_docs(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingles): each doc's distinct word n-gram shingles."""
     toks = docs.select("doc_id", _tokens_col(F.col("text")).alias("_toks"))
     return toks.select(
-        "doc_id", _shingles_of_tokens(F.col("_toks"), n).alias("shingles")
+        "doc_id",
+        F.array_distinct(_ngrams_of_tokens(F.col("_toks"), n)).alias("shingles"),
     )
 
 
-def verify_jaccard_pairs(
-    docs: DataFrame,
-    candidates: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-    shingles: DataFrame | None = None,
-) -> DataFrame:
-    """Exact shingle-set Jaccard over an explicit candidate-pair set
-    (doc_a, doc_b): joins each side's shingle array and intersects —
-    cost is O(|candidates|), never O(N²). The verification stage both
-    minhash_lsh and candidate-mode ngram_jaccard_pairs share.
-
-    The verify join carries ``xxhash64(shingle)`` int64 arrays, not the
-    n-gram strings — ~16x fewer shuffle bytes per 3-gram at crawl scale.
-    Set sizes/intersections are 64-bit-exact (a cross-doc collision that
-    changes a Jaccard value needs two distinct shingles hashing equal
-    within one pair's union — ~|union|²/2^65 per pair), matching the
-    suite-wide convention (MinHash, SimHash, winnowing are already
-    xxhash64-keyed); the e2e values still equal the string-exact DuckDB
-    oracle at the driver scale.
-
-    ``shingles``: an already-computed (ideally pinned) shingle_docs
-    table to reuse — minhash_lsh shares ONE shingle pass between
-    candidate generation and this verify stage. The hashed per-doc
-    arrays feed BOTH join sides, so they are pinned here regardless:
-    un-pinned, the tokenize+shingle chain replays once per side."""
-    base = shingles if shingles is not None else shingle_docs(docs, n)
-    sh = base.select(
+def _hashed_shingles(sh: DataFrame) -> DataFrame:
+    """(doc_id, shingles) with each shingle set as distinct xxhash64
+    longs — the set representation every overlap count here uses."""
+    return sh.select(
         "doc_id",
         F.array_distinct(
             F.transform("shingles", lambda s: F.xxhash64(s))
         ).alias("shingles"),
-    ).localCheckpoint(eager=False)
+    )
+
+
+def _shingle_rows(sh: DataFrame, *cols) -> DataFrame:
+    """One row per (``cols``, shingle) of a shingle-set table — the one
+    place this module explodes a shingle array. ``posexplode_outer`` +
+    ``pos IS NOT NULL`` yields exactly explode's rows; a plain explode
+    of the bound ``shingles`` column gets an inferred size filter that
+    the optimizer pushes below the projection, re-running the
+    tokenize+shingle chain."""
+    return (
+        sh.select(*cols, F.posexplode_outer("shingles").alias("_pos", "shingle"))
+        .filter(F.col("_pos").isNotNull())
+        .drop("_pos")
+    )
+
+
+def _pair_overlap(
+    docs: DataFrame,
+    n: int,
+    candidates: DataFrame | None = None,
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """The pair-overlap table (doc_a, doc_b, na, nb, n_inter) — |A|, |B|
+    and |A∩B| over xxhash64 shingle sets — that the Jaccard and
+    containment operators project.
+
+    ``candidates=None`` (exact mode): co-occurrence self-join of the
+    (doc, shingle) rows, counted per pair with doc_a < doc_b.
+    Per-shingle fanout is df², so exact mode suits ≤10^6-doc
+    partitions/samples/audits. ``candidates`` given: only those
+    distinct (doc_a, doc_b) pairs, intersected by ``array_intersect`` —
+    O(|candidates|), never O(N²).
+
+    ``shingles``: an already-computed shingle_docs table to reuse. The
+    hashed sets (or their rows) feed both join sides, so they are
+    pinned: un-pinned, the tokenize+shingle chain replays per side."""
+    base = shingles if shingles is not None else shingle_docs(docs, n)
+    sh = _hashed_shingles(base)
+    if candidates is None:
+        rows = _shingle_rows(
+            sh.withColumn("n_sh", F.size("shingles")), "doc_id", "n_sh"
+        ).localCheckpoint(eager=False)
+        a = rows.select(
+            F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
+        )
+        b = rows.select(
+            F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "shingle"
+        )
+        return (
+            a.join(b, "shingle")
+            .filter(F.col("doc_a") < F.col("doc_b"))
+            .groupBy("doc_a", "doc_b", "na", "nb")
+            .agg(F.count(F.lit(1)).alias("n_inter"))
+        )
+    sh = sh.localCheckpoint(eager=False)
     return (
         candidates.select("doc_a", "doc_b")
         .distinct()
@@ -123,17 +158,53 @@ def verify_jaccard_pairs(
             sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
             "doc_b",
         )
-        .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.size("sh_a") + F.size("sh_b") - F.col("n_inter")),
-                6,
-            ),
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size("sh_a").alias("na"),
+            F.size("sh_b").alias("nb"),
+            F.size(F.array_intersect("sh_a", "sh_b")).alias("n_inter"),
         )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "jaccard")
+    )
+
+
+def _jaccard(n_inter: Column, na: Column, nb: Column) -> Column:
+    """round(|A∩B| / |A∪B|, 6), with |A∪B| = |A| + |B| - |A∩B|."""
+    return F.round(n_inter.cast("double") / (na + nb - n_inter), 6)
+
+
+def _jaccard_pairs(overlap: DataFrame, threshold: float) -> DataFrame:
+    j = _jaccard(F.col("n_inter"), F.col("na"), F.col("nb"))
+    return overlap.select("doc_a", "doc_b", j.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
+    )
+
+
+def verify_jaccard_pairs(
+    docs: DataFrame,
+    candidates: DataFrame,
+    n: int = 3,
+    threshold: float = 0.5,
+    shingles: DataFrame | None = None,
+) -> DataFrame:
+    """Exact shingle-set Jaccard over an explicit candidate-pair set
+    (doc_a, doc_b): the candidate mode of :func:`_pair_overlap`, cost
+    O(|candidates|), never O(N²). The verification stage both
+    minhash_lsh and candidate-mode ngram_jaccard_pairs share.
+
+    The sets are ``xxhash64(shingle)`` int64 arrays, not the n-gram
+    strings — ~16x fewer shuffle bytes per 3-gram at crawl scale, in
+    both modes of the overlap table. Set sizes/intersections are
+    64-bit-exact (a cross-doc collision that changes a Jaccard value
+    needs two distinct shingles hashing equal within one pair's union —
+    ~|union|²/2^65 per pair), matching the suite-wide convention
+    (MinHash, SimHash, winnowing are already xxhash64-keyed); the e2e
+    values still equal the string-exact DuckDB oracle at the driver
+    scale.
+
+    ``shingles``: an already-computed shingle_docs table to reuse."""
+    return _jaccard_pairs(
+        _pair_overlap(docs, n, candidates, shingles), threshold
     )
 
 
@@ -143,12 +214,12 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     candidates: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact Jaccard over word n-gram shingle *sets*. Returns
+    """Exact Jaccard over word n-gram shingle *sets* (xxhash64-keyed, see
+    verify_jaccard_pairs for the collision arithmetic). Returns
     (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard >= threshold.
 
-    ``candidates=None`` (exact mode): co-occurrence self-join — explode
-    shingles, join per shingle, count intersections, |A∪B|=|A|+|B|-|A∩B|.
-    Per-shingle fanout is df², so exact mode suits ≤10^6-doc
+    ``candidates=None`` (exact mode): co-occurrence self-join,
+    |A∪B|=|A|+|B|-|A∩B|; exact mode suits ≤10^6-doc
     partitions/samples/audits.
 
     ``candidates`` given (the crawl-scale path): verify ONLY those pairs
@@ -157,35 +228,7 @@ def ngram_jaccard_pairs(
     LSH bands recall every qualifying pair (the driver oracle pins
     exactly that equality on the test corpus).
     """
-    if candidates is not None:
-        return verify_jaccard_pairs(docs, candidates, n, threshold)
-    sh = shingle_docs(docs, n).withColumn("n_sh", F.size("shingles"))
-    # both co-occurrence sides consume the exploded table — pinned so
-    # tokenize+shingle runs once, not per side
-    exploded = sh.select(
-        "doc_id", "n_sh", F.explode("shingles").alias("shingle")
-    ).localCheckpoint(eager=False)
-    a = exploded.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
-    )
-    b = exploded.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "shingle"
-    )
-    inter = (
-        a.join(b, "shingle")
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "na", "nb")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    jac = F.col("n_inter").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_inter")
-    )
-    return (
-        inter.select(
-            "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
+    return _jaccard_pairs(_pair_overlap(docs, n, candidates), threshold)
 
 
 def containment_pairs(
@@ -201,87 +244,33 @@ def containment_pairs(
     with round(containment, 6) >= threshold; mutual near-dups emit both
     directions.
 
-    ``candidates=None`` (exact mode): the ngram_jaccard_pairs
-    co-occurrence join, emitting both directions. ``candidates`` given:
-    verify only those (doc_a, doc_b) pairs — O(|candidates|) like
-    verify_jaccard_pairs. SCALE CAVEAT, documented loudly: banded
+    Both directions of the pair-overlap table (:func:`_pair_overlap`):
+    ``candidates=None`` is its exact co-occurrence mode, ``candidates``
+    given verifies only those (doc_a, doc_b) pairs — O(|candidates|)
+    like verify_jaccard_pairs. SCALE CAVEAT, documented loudly: banded
     MinHash candidates recall by JACCARD, so high-containment /
     low-Jaccard pairs (tiny doc inside huge doc) are NOT reliably
     recalled by minhash_candidates — a crawl-scale containment pass
     needs an asymmetric scheme (LSH Ensemble / partition-by-set-size)
-    or a rare-shingle candidate join; exact mode is the certification
-    path the driver oracle pins."""
-    if candidates is not None:
-        sh = shingle_docs(docs, n).select(
-            "doc_id",
-            F.array_distinct(
-                F.transform("shingles", lambda s: F.xxhash64(s))
-            ).alias("shingles"),
-        ).localCheckpoint(eager=False)
-        both = (
-            candidates.select("doc_a", "doc_b")
-            .distinct()
-            .join(
-                sh.select(F.col("doc_id").alias("doc_a"), F.col("shingles").alias("sh_a")),
-                "doc_a",
-            )
-            .join(
-                sh.select(F.col("doc_id").alias("doc_b"), F.col("shingles").alias("sh_b")),
-                "doc_b",
-            )
-            .withColumn("n_inter", F.size(F.array_intersect("sh_a", "sh_b")))
-            .select(
-                "doc_a", "doc_b", "n_inter",
-                F.size("sh_a").alias("na"), F.size("sh_b").alias("nb"),
-            )
+    or a rare-shingle candidate join (:func:`containment_candidates`);
+    exact mode is the certification path the driver oracle pins."""
+    # both directions consume the whole overlap chain — pinned (lazily)
+    # so it executes once, not per direction
+    both = _pair_overlap(docs, n, candidates).localCheckpoint(eager=False)
+
+    def direction(doc: str, other: str, size: str) -> DataFrame:
+        c = F.round(F.col("n_inter").cast("double") / F.col(size), 6)
+        return both.select(
+            F.col(doc).alias("doc_id"),
+            F.col(other).alias("other_id"),
+            c.alias("containment"),
         )
-    else:
-        # exact mode shares candidates mode's xxhash64(shingle)
-        # convention (one set-size definition across modes, and the
-        # co-occurrence join shuffles int64s, not n-gram strings —
-        # ~16x fewer bytes per 3-gram); set sizes are 64-bit-exact,
-        # see verify_jaccard_pairs for the collision arithmetic
-        sh = shingle_docs(docs, n).select(
-            "doc_id",
-            F.array_distinct(
-                F.transform("shingles", lambda s: F.xxhash64(s))
-            ).alias("shingles"),
-        ).withColumn("n_sh", F.size("shingles"))
-        # both co-occurrence sides consume the exploded shingle table —
-        # pinned so tokenize+shingle+hash runs once, not per side
-        exploded = sh.select(
-            "doc_id", "n_sh", F.explode("shingles").alias("shingle")
-        ).localCheckpoint(eager=False)
-        a = exploded.select(
-            F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"), "shingle"
-        )
-        b = exploded.select(
-            F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"), "shingle"
-        )
-        both = (
-            a.join(b, "shingle")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b", "na", "nb")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-    # fwd and rev are two consumers of the whole verify/co-occurrence
-    # chain — pinned (lazily) so it executes once, not per direction
-    both = both.localCheckpoint(eager=False)
-    fwd = both.select(
-        F.col("doc_a").alias("doc_id"),
-        F.col("doc_b").alias("other_id"),
-        F.round(F.col("n_inter").cast("double") / F.col("na"), 6).alias(
-            "containment"
-        ),
+
+    return (
+        direction("doc_a", "doc_b", "na")
+        .unionByName(direction("doc_b", "doc_a", "nb"))
+        .filter(F.col("containment") >= threshold)
     )
-    rev = both.select(
-        F.col("doc_b").alias("doc_id"),
-        F.col("doc_a").alias("other_id"),
-        F.round(F.col("n_inter").cast("double") / F.col("nb"), 6).alias(
-            "containment"
-        ),
-    )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
 
 
 def containment_candidates(
@@ -324,11 +313,10 @@ def containment_candidates(
     from pyspark.sql import Window
 
     # three consumers (df table, rare-selection join, posting join) —
-    # pinned so tokenize+shingle+explode runs once, not per consumer
-    ex = (
-        shingle_docs(docs, n)
-        .select("doc_id", F.explode("shingles").alias("shingle"))
-        .localCheckpoint(eager=False)
+    # pinned so tokenize+shingle+explode runs once, not per consumer.
+    # String shingles, not hashes: the rare-k ties break by the string.
+    ex = _shingle_rows(shingle_docs(docs, n), "doc_id").localCheckpoint(
+        eager=False
     )
     # shingles are distinct per doc (shingle_docs), so count(*) IS the
     # document frequency
@@ -763,19 +751,12 @@ def contamination_flags(
     scan joins map-side with no corpus shuffle; output is one row per
     contaminated (doc_id, benchmark_id) pair with the shared-gram count.
     """
-    def shingle_rows(df: DataFrame, id_col: str) -> DataFrame:
-        # == explode's rows; a plain explode of the bound column gets an
-        # inferred size filter pushed below the projection (re-runs the
-        # shingle chain)
-        sh = shingle_docs(df, n).select(
-            F.col("doc_id").alias(id_col),
-            F.posexplode_outer("shingles").alias("_pos", "shingle"),
-        )
-        return sh.filter(F.col("_pos").isNotNull()).drop("_pos")
-
+    bench = _shingle_rows(
+        shingle_docs(benchmarks, n), F.col("doc_id").alias("benchmark_id")
+    )
     return (
-        shingle_rows(docs, "doc_id")
-        .join(F.broadcast(shingle_rows(benchmarks, "benchmark_id")), "shingle")
+        _shingle_rows(shingle_docs(docs, n), "doc_id")
+        .join(F.broadcast(bench), "shingle")
         .filter(F.col("doc_id") != F.col("benchmark_id"))
         .groupBy("doc_id", "benchmark_id")
         .agg(F.count(F.lit(1)).alias("n_shared_grams"))
@@ -832,29 +813,15 @@ def fuzzy_contamination(
         .select("doc_id", "benchmark_id")
         .distinct()
     )
-
-    def _hashed_sh(sh: DataFrame) -> DataFrame:
-        return sh.select(
-            "doc_id",
-            F.array_distinct(
-                F.transform("shingles", lambda s: F.xxhash64(s))
-            ).alias("sh"),
-        )
-
-    corp = _hashed_sh(sh_docs).join(F.broadcast(cand), "doc_id")
-    bench = _hashed_sh(sh_bench).select(
-        F.col("doc_id").alias("benchmark_id"), F.col("sh").alias("sh_b")
+    corp = _hashed_shingles(sh_docs).join(F.broadcast(cand), "doc_id")
+    bench = _hashed_shingles(sh_bench).select(
+        F.col("doc_id").alias("benchmark_id"), F.col("shingles").alias("sh_b")
     )
     j = (
         corp.join(F.broadcast(bench), "benchmark_id")
-        .withColumn("n_inter", F.size(F.array_intersect("sh", "sh_b")))
+        .withColumn("n_inter", F.size(F.array_intersect("shingles", "sh_b")))
         .withColumn(
-            "_j",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.size("sh") + F.size("sh_b") - F.col("n_inter")),
-                6,
-            ),
+            "_j", _jaccard(F.col("n_inter"), F.size("shingles"), F.size("sh_b"))
         )
     )
     return (
@@ -874,15 +841,7 @@ def repetition_stats(docs: DataFrame, n: int = 3) -> DataFrame:
     grams per row. Returns (doc_id, n_grams, n_unique_grams,
     dup_ratio_e6)."""
     toks = docs.select("doc_id", _tokens_col(F.col("text")).alias("_toks"))
-    t = F.col("_toks")  # bound column: see _shingles_of_tokens note
-    grams = F.when(
-        F.size(t) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(t) - n),
-            lambda i: F.concat_ws(" ", F.slice(t, i + 1, n)),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", t)))
-    g = toks.select("doc_id", grams.alias("g"))
+    g = toks.select("doc_id", _ngrams_of_tokens(F.col("_toks"), n).alias("g"))
     n_grams = F.size("g")
     n_unique = F.size(F.array_distinct("g"))
     dup_ratio = F.when(
@@ -1266,7 +1225,7 @@ def simhash_incremental(
 def _chunks_of_tokens(t: Column, chunk_words: int) -> Column:
     """Array of consecutive ``chunk_words``-token windows of an
     ALREADY-PROJECTED token column (same bound-column rule as
-    _shingles_of_tokens: an inline expression would be re-derived per
+    _ngrams_of_tokens: an inline expression would be re-derived per
     chunk inside the HOF lambda). The tail chunk keeps the remainder
     (slice clamps); an empty token array yields an empty chunk array."""
     n_chunks = F.ceil(F.size(t) / F.lit(chunk_words))
@@ -1378,7 +1337,7 @@ def duplicate_spans(docs: DataFrame, n: int = 13) -> DataFrame:
     from pyspark.sql import Window
 
     toks = docs.select("doc_id", _tokens_col(F.col("text")).alias("_toks"))
-    t = F.col("_toks")  # bound column: see _shingles_of_tokens note
+    t = F.col("_toks")  # bound column: see _ngrams_of_tokens note
     windows = F.when(
         F.size(t) >= n,
         F.transform(
@@ -1441,7 +1400,7 @@ def remove_duplicate_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     toks = docs.select(
         "doc_id", _tokens_col(F.col("text")).alias("_toks")
     ).join(span_arrays, "doc_id", "left")
-    t = F.col("_toks")  # bound column: see _shingles_of_tokens note
+    t = F.col("_toks")  # bound column: see _ngrams_of_tokens note
     sp = F.coalesce(
         F.col("_spans"),
         F.array().cast("array<struct<span_start:long,span_end:long>>"),

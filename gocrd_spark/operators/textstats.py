@@ -240,7 +240,7 @@ def winnowing_fingerprints(docs: DataFrame, k: int = 8, w: int = 4) -> DataFrame
     # element, and HOF lambda bodies get no common-subexpression
     # elimination — inlined, the full normalization re-ran per gram,
     # O(n²) regexp work (measured 10x on ~1.5 KB docs; the same trap
-    # _shingles_of_tokens documents for the shingle path)
+    # _ngrams_of_tokens documents for the shingle path)
     norm = F.col("_norm")
     n = F.length(norm)
     # k-gram hashes JVM-side (substr with dynamic start: Column.substr).

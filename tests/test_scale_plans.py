@@ -572,33 +572,67 @@ def _optimized(df) -> str:
     return df._jdf.queryExecution().optimizedPlan().toString()
 
 
+@pytest.fixture
+def pinned_plans(monkeypatch):
+    """Optimized plans of the tables pinned with ``localCheckpoint``
+    while a test builds its query, in call order. The final plan shows
+    a pinned table only as a LogicalRDD, so what runs inside a pin is
+    visible here alone."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans: list[str] = []
+    local_checkpoint = DataFrame.localCheckpoint
+
+    def recording(self, *args, **kwargs):
+        plans.append(_optimized(self))
+        return local_checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", recording)
+    return plans
+
+
 class TestGeneratorInputsEvaluatedOnce:
-    def test_no_filter_reruns_a_lambda_chain(self, spark, docs):
+    def test_no_filter_reruns_a_lambda_chain(self, spark, docs, pinned_plans):
         """On the default session (InferFiltersFromGenerate active), no
-        Filter may evaluate a higher-order-function chain: a filter the
-        rule infers on a bound generator input is pushed below its
-        projection and re-runs the tokenize/shingle/chunk chain."""
+        Filter may evaluate a higher-order-function chain, in the final
+        plan or inside a pin: a filter the rule infers on a bound
+        generator input is pushed below its projection and re-runs the
+        tokenize/shingle/chunk chain."""
         from gocrd_spark.operators.bpe import bpe_vocab
-        from gocrd_spark.operators.dedup import contamination_flags, paragraph_dedup
+        from gocrd_spark.operators.dedup import (
+            containment_candidates,
+            containment_pairs,
+            contamination_flags,
+            ngram_jaccard_pairs,
+            paragraph_dedup,
+        )
         from gocrd_spark.operators.textstats import chunk_documents, pack_sequences
 
         excluded = spark.conf.get("spark.sql.optimizer.excludedRules", "") or ""
         assert "InferFiltersFromGenerate" not in excluded
         bench = docs.filter(F.col("doc_id") % 50 == 0)
-        for df in (
-            contamination_flags(docs, bench, n=13),
-            paragraph_dedup(docs, chunk_words=8),
-            bpe_vocab(docs, [(0, "e", "r</w>")]),
-            chunk_documents(docs, chunk_tokens=64, overlap=16),
-            pack_sequences(docs, seq_len=512),
-            pack_sequences(docs, seq_len=512, token_mode="bpe"),
+        for build in (
+            lambda: contamination_flags(docs, bench, n=13),
+            lambda: paragraph_dedup(docs, chunk_words=8),
+            lambda: bpe_vocab(docs, [(0, "e", "r</w>")]),
+            lambda: chunk_documents(docs, chunk_tokens=64, overlap=16),
+            lambda: pack_sequences(docs, seq_len=512),
+            lambda: pack_sequences(docs, seq_len=512, token_mode="bpe"),
+            lambda: ngram_jaccard_pairs(docs, n=3),
+            lambda: containment_pairs(docs, n=3, threshold=0.5),
+            lambda: containment_pairs(
+                docs, n=3, threshold=0.5,
+                candidates=containment_candidates(docs, n=3, k=5),
+            ),
         ):
-            plan = _optimized(df)
-            filters = [
-                line for line in plan.splitlines()
-                if line.lstrip(" :+-|").startswith("Filter")
-            ]
-            assert not [f for f in filters if "lambdafunction" in f], plan
+            pinned_plans.clear()
+            df = build()
+            for plan in (*pinned_plans, _optimized(df)):
+                filters = [
+                    line for line in plan.splitlines()
+                    if line.lstrip(" :+-|").startswith("Filter")
+                ]
+                assert not [f for f in filters if "lambdafunction" in f], plan
 
 
 class TestSingleKernelPass:
@@ -625,9 +659,9 @@ class TestSingleKernelPass:
         plan = _plan(extraction_report(extract_pages(self._pages(spark))))
         assert plan.count("MapInPandas") == 1, plan
 
-    def test_phash_near_dups_runs_the_kernel_once(self, spark):
+    def test_phash_near_dups_runs_the_kernel_once(self, spark, pinned_plans):
         """The band table feeds both self-join sides and the bucket
-        cap; pinned, the phash kernel sits behind the pin."""
+        cap; pinned, the phash kernel runs once, inside the pin."""
         from gocrd_spark.operators.multimodal import (
             phash_near_dups,
             synth_ppm_media_pdf,
@@ -636,8 +670,9 @@ class TestSingleKernelPass:
         media = spark.createDataFrame(
             synth_ppm_media_pdf(20), schema="id long, kind string, payload binary"
         )
-        plan = _plan(phash_near_dups(media, max_hamming=6))
-        assert plan.count("MapInPandas") <= 1, plan
+        final = _plan(phash_near_dups(media, max_hamming=6))
+        plans = [*pinned_plans, final]
+        assert sum(p.count("MapInPandas") for p in plans) == 1, plans
 
 
 class TestDedupPins:
