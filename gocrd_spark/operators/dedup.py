@@ -109,10 +109,7 @@ def _shingle_rows(sh: DataFrame, *cols) -> DataFrame:
 
 
 def _pair_overlap(
-    docs: DataFrame,
-    n: int,
-    candidates: DataFrame | None = None,
-    shingles: DataFrame | None = None,
+    docs: DataFrame, n: int, candidates: DataFrame | None = None
 ) -> DataFrame:
     """The pair-overlap table (doc_a, doc_b, na, nb, n_inter) — |A|, |B|
     and |A∩B| over xxhash64 shingle sets — that the Jaccard and
@@ -125,11 +122,9 @@ def _pair_overlap(
     distinct (doc_a, doc_b) pairs, intersected by ``array_intersect`` —
     O(|candidates|), never O(N²).
 
-    ``shingles``: an already-computed shingle_docs table to reuse. The
-    hashed sets (or their rows) feed both join sides, so they are
+    The hashed sets (or their rows) feed both join sides, so they are
     pinned: un-pinned, the tokenize+shingle chain replays per side."""
-    base = shingles if shingles is not None else shingle_docs(docs, n)
-    sh = _hashed_shingles(base)
+    sh = _hashed_shingles(shingle_docs(docs, n))
     if candidates is None:
         rows = _shingle_rows(
             sh.withColumn("n_sh", F.size("shingles")), "doc_id", "n_sh"
@@ -185,12 +180,11 @@ def verify_jaccard_pairs(
     candidates: DataFrame,
     n: int = 3,
     threshold: float = 0.5,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """Exact shingle-set Jaccard over an explicit candidate-pair set
-    (doc_a, doc_b): the candidate mode of :func:`_pair_overlap`, cost
-    O(|candidates|), never O(N²). The verification stage both
-    minhash_lsh and candidate-mode ngram_jaccard_pairs share.
+    (doc_a, doc_b): candidate-mode :func:`ngram_jaccard_pairs`, cost
+    O(|candidates|), never O(N²) — the verification stage of
+    minhash_lsh and minhash_incremental.
 
     The sets are ``xxhash64(shingle)`` int64 arrays, not the n-gram
     strings — ~16x fewer shuffle bytes per 3-gram at crawl scale, in
@@ -200,12 +194,8 @@ def verify_jaccard_pairs(
     ~|union|²/2^65 per pair), matching the suite-wide convention
     (MinHash, SimHash, winnowing are already xxhash64-keyed); the e2e
     values still equal the string-exact DuckDB oracle at the driver
-    scale.
-
-    ``shingles``: an already-computed shingle_docs table to reuse."""
-    return _jaccard_pairs(
-        _pair_overlap(docs, n, candidates, shingles), threshold
-    )
+    scale."""
+    return ngram_jaccard_pairs(docs, n, threshold, candidates=candidates)
 
 
 def ngram_jaccard_pairs(

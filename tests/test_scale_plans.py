@@ -202,6 +202,41 @@ class TestCandidateJaccard:
         }
         assert exact == via_candidates and len(exact) > 0
 
+    def test_exact_mode_equals_string_set_jaccard(self, docs):
+        """Both modes count over xxhash64 shingle sets; this pins them to
+        the string-set definition: a pure-Python Jaccard over the n-gram
+        strings under the same normalization (lowercase, whitespace runs
+        to one space, trim; a doc shorter than n is one gram of its
+        whole text)."""
+        import re
+
+        from gocrd_spark.operators.dedup import ngram_jaccard_pairs
+
+        n, threshold = 3, 0.12
+
+        def shingles(text):
+            norm = re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ")
+            toks = [t for t in norm.split(" ") if t]
+            if len(toks) < n:
+                return {" ".join(toks)}
+            return {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+
+        sets = {r.doc_id: shingles(r.text) for r in docs.collect()}
+        ids = sorted(sets)
+        want = {}
+        for i, a in enumerate(ids):
+            for b in ids[i + 1 :]:
+                j = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if round(j, 6) >= threshold:
+                    want[(a, b)] = j
+        got = {
+            (r.doc_a, r.doc_b): r.jaccard
+            for r in ngram_jaccard_pairs(docs, n=n, threshold=threshold).collect()
+        }
+        assert set(got) == set(want) and got
+        for pair, j in got.items():
+            assert abs(j - want[pair]) <= 5e-7
+
     def test_minhash_candidates_recall_on_planted_dups(self, docs):
         """The driver wiring: exact Jaccard over minhash candidates must
         find every planted near-dup pair at the driver threshold."""
