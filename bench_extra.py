@@ -51,7 +51,7 @@ def main() -> int:
         else:
             names.append(args[i]); i += 1
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     spark = get_spark(master=f"local[{cpus}]", app_name=f"bench-extra-{mode}")
     q = entry.queries()
     if mode == "sweep":

@@ -27,12 +27,15 @@ import uuid
 from typing import Iterator, Optional
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .kernel import EXTRACTED_SCHEMA, METS_FILES_SCHEMA, extract_batch, extract_kernel
 from .kernel import group_id, mets_kernel_factory
+from .session import ARROW_BATCH_ROWS
 
 
 def load_pages(
@@ -277,6 +280,54 @@ def read_commit_stats(output_dir: str) -> list[dict]:
     return out
 
 
+def _writer_tasks(spark: SparkSession, n_groups: int) -> int:
+    """Tasks of the resumable job's writer stage: one per core, as the
+    fixed Python cost is paid per task, never more than there are
+    groups."""
+    return min(n_groups, spark.sparkContext.defaultParallelism)
+
+
+class _GroupFile:
+    """One commit group's parquet file in the resumable job, written
+    under a unique tmp name and published by rename.
+
+    The final name is deterministic per group: a task RETRY (or a
+    speculative attempt) re-publishing the group atomically OVERWRITES
+    the previous attempt's file instead of adding a duplicate — group
+    contents are deterministic, so last writer wins with identical
+    bytes. The tmp name stays unique per attempt so concurrent attempts
+    never share a handle. Rows are held until ``ARROW_BATCH_ROWS`` are
+    pending, so a task's batches, which mix its groups, still make full
+    row groups."""
+
+    def __init__(self, root: str, g: int, schema) -> None:
+        gdir = os.path.join(root, f"g={g}")
+        os.makedirs(gdir, exist_ok=True)
+        self.final = os.path.join(gdir, f"part-{g:05d}.parquet")
+        self.tmp = os.path.join(gdir, f".part-{uuid.uuid4().hex}.tmp")
+        self.writer = pq.ParquetWriter(self.tmp, schema, compression="zstd")
+        self.pending: list = []
+        self.n_pending = 0
+
+    def add(self, rows: pa.Table) -> None:
+        self.pending.append(rows)
+        self.n_pending += rows.num_rows
+        if self.n_pending >= ARROW_BATCH_ROWS:
+            self._write(self.n_pending - self.n_pending % ARROW_BATCH_ROWS)
+
+    def _write(self, n: int) -> None:
+        table = pa.concat_tables(self.pending)
+        self.writer.write_table(table.slice(0, n), row_group_size=ARROW_BATCH_ROWS)
+        self.pending = [table.slice(n)]
+        self.n_pending -= n
+
+    def publish(self) -> None:
+        if self.n_pending:
+            self._write(self.n_pending)
+        self.writer.close()
+        os.replace(self.tmp, self.final)  # atomic on one filesystem
+
+
 def run_extract_job(
     spark: SparkSession,
     input_path: str,
@@ -298,19 +349,32 @@ def run_extract_job(
     both files publish, so resume can never see a half-written group).
 
     Each commit group ``g`` (deterministic function of url+salt+n_groups)
-    is written by exactly one task — ``repartition(n_groups, g)``
-    co-locates all of a group's rows — as ``data/g=<g>/part-<uuid>.parquet``
-    via tmp+rename, then marked done in the commit log. A rerun skips
-    committed groups entirely (anti-filter on a column predicate, so
-    Catalyst can prune before the shuffle).
+    is written by exactly one task as ``data/g=<g>/part-<g>.parquet`` via
+    tmp+rename, then marked done in the commit log. The rows are
+    repartitioned on ``g`` into ``min(n_groups, defaultParallelism)``
+    tasks, so every group lands in one task and a task holds several
+    groups, each with its own open writer. Tasks, not groups, set the
+    Python cost: every task pays a fixed start-up in its worker. A
+    task's Arrow batches mix its groups: the kernel runs once per batch,
+    its rows go to their group's writer, and each writer holds its
+    group's result rows until ``ARROW_BATCH_ROWS`` are pending and
+    writes them in row groups of that size. A rerun skips committed groups
+    entirely (anti-filter on a column predicate, so Catalyst can prune
+    before the shuffle).
+
+    The retry unit is a task of several groups; the commit unit stays
+    one group. A task commits its groups after its last batch, so a
+    failed task commits none of them, and a resume may spread the
+    remaining groups over a different number of tasks.
 
     ``fail_group`` injects a mid-job failure for the kill/resume test.
 
     At 10^12-document scale: n_groups scales to O(100k); the commit dir
-    maps to an object-store prefix; listing is one LIST call; group size
-    = input/n_groups stays within executor memory because the kernel
-    streams Arrow batches straight into an open ParquetWriter (no
-    per-group buffering).
+    maps to an object-store prefix; listing is one LIST call. Executor
+    memory stays bounded because result rows stream into open
+    ParquetWriters: at most ``ARROW_BATCH_ROWS`` pending result rows per
+    open group, and a task opens only the ``n_groups / tasks`` groups
+    it holds.
     """
     os.makedirs(os.path.join(output_dir, "data"), exist_ok=True)
     if with_metadata:
@@ -345,7 +409,7 @@ def run_extract_job(
     df = pages.select("url", "html").withColumn("g", group_id(n_groups, salt))
     if done:
         df = df.filter(~F.col("g").isin(*[int(g) for g in done]))
-    df = df.repartition(n_groups, F.col("g"))
+    df = df.repartition(_writer_tasks(spark, n_groups), F.col("g"))
 
     data_dir = os.path.join(output_dir, "data")
     meta_dir = os.path.join(output_dir, "meta")
@@ -354,8 +418,7 @@ def run_extract_job(
     emit_meta = with_metadata
 
     def writer_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+        from .kernel import page_meta_batch
 
         arrow_schema = pa.schema(
             [
@@ -401,75 +464,56 @@ def run_extract_job(
                pa.field("error", pa.string())]
         )
         # state per commit group seen in this task
-        writers: dict[int, tuple] = {}  # g -> (writer, tmp_path, final_path, stats)
-        meta_writers: dict[int, tuple] = {}  # g -> (writer, tmp_path, final_path)
+        writers: dict[int, tuple] = {}  # g -> (_GroupFile, stats)
+        meta_writers: dict[int, _GroupFile] = {}
         t0 = time.time()
 
         def get_writer(g: int):
             if g not in writers:
-                gdir = os.path.join(data_dir, f"g={g}")
-                os.makedirs(gdir, exist_ok=True)
-                # deterministic final name per group: a task RETRY (or a
-                # speculative attempt) re-publishing the group atomically
-                # OVERWRITES the previous attempt's file instead of adding
-                # a duplicate — group contents are deterministic, so last
-                # writer wins with identical bytes. Tmp name stays unique
-                # per attempt so concurrent attempts never share a handle.
-                fname = f"part-{g:05d}.parquet"
-                tmp = os.path.join(gdir, f".part-{uuid.uuid4().hex}.tmp")
-                final = os.path.join(gdir, fname)
                 stats = {"g": g, "input_rows": 0, "ok_rows": 0, "err_rows": 0,
                          "bytes_in": 0, "bytes_out": 0}
-                writers[g] = (pq.ParquetWriter(tmp, arrow_schema, compression="zstd"),
-                              tmp, final, stats)
+                writers[g] = (_GroupFile(data_dir, g, arrow_schema), stats)
                 if emit_meta:
-                    mgdir = os.path.join(meta_dir, f"g={g}")
-                    os.makedirs(mgdir, exist_ok=True)
-                    mtmp = os.path.join(mgdir, f".part-{uuid.uuid4().hex}.tmp")
-                    mfinal = os.path.join(mgdir, fname)
-                    meta_writers[g] = (
-                        pq.ParquetWriter(mtmp, meta_schema, compression="zstd"),
-                        mtmp, mfinal,
-                    )
+                    meta_writers[g] = _GroupFile(meta_dir, g, meta_schema)
             return writers[g]
 
         for pdf in batches:
-            for g_value, grp in pdf.groupby("g", sort=False):
+            # the kernel runs on the whole batch, which mixes the task's
+            # groups; its rows are then routed to their group's writer
+            groups = pdf.groupby("g", sort=False).indices
+            if inject_fail is not None and inject_fail in groups:
+                raise RuntimeError(f"injected failure for group {inject_fail}")
+            result = extract_batch(pdf)
+            table = pa.Table.from_pandas(result, schema=arrow_schema, preserve_index=False)
+            err = result["error"].notna().to_numpy()
+            bytes_in = pdf["html"].map(
+                lambda b: len(b) if b is not None else 0).to_numpy()
+            bytes_out = result["text"].map(
+                lambda t: len(t.encode("utf-8")) if t is not None else 0).to_numpy()
+            if emit_meta:
+                meta = pa.Table.from_pandas(
+                    page_meta_batch(pdf), schema=meta_schema, preserve_index=False
+                )
+            for g_value, rows in groups.items():
                 g = int(g_value)
-                if inject_fail is not None and g == inject_fail:
-                    raise RuntimeError(f"injected failure for group {g}")
-                result = extract_batch(grp)
-                writer, _, _, stats = get_writer(g)
-                stats["input_rows"] += len(grp)
-                n_err = int(result["error"].notna().sum())
+                writer, stats = get_writer(g)
+                n_err = int(err[rows].sum())
+                stats["input_rows"] += len(rows)
                 stats["err_rows"] += n_err
-                stats["ok_rows"] += len(result) - n_err
-                stats["bytes_in"] += int(grp["html"].map(
-                    lambda b: len(b) if b is not None else 0).sum())
-                stats["bytes_out"] += int(result["text"].map(
-                    lambda t: len(t.encode("utf-8")) if t is not None else 0).sum())
-                writer.write_table(pa.Table.from_pandas(result, schema=arrow_schema,
-                                                        preserve_index=False))
+                stats["ok_rows"] += len(rows) - n_err
+                stats["bytes_in"] += int(bytes_in[rows].sum())
+                stats["bytes_out"] += int(bytes_out[rows].sum())
+                writer.add(table.take(rows))
                 if emit_meta:
-                    from .kernel import page_meta_batch
-
-                    meta_writers[g][0].write_table(
-                        pa.Table.from_pandas(
-                            page_meta_batch(grp), schema=meta_schema,
-                            preserve_index=False,
-                        )
-                    )
+                    meta_writers[g].add(meta.take(rows))
         # close + atomic publish + commit markers (meta publishes BEFORE
         # the marker: a group is either fully present in both tables or
         # uncommitted — never half)
         summaries = []
-        for g, (writer, tmp, final, stats) in writers.items():
-            writer.close()
-            os.replace(tmp, final)  # atomic on one filesystem
+        for g, (writer, stats) in writers.items():
+            writer.publish()
             if emit_meta:
-                mwriter, mtmp, mfinal = meta_writers[g]
-                mwriter.close()
-                os.replace(mtmp, mfinal)
+                meta_writers[g].publish()
             stats["wall_ms"] = int((time.time() - t0) * 1000)
             marker = os.path.join(commit_dir, f"g={g}.json")
             marker_tmp = marker + f".{uuid.uuid4().hex}.tmp"

@@ -8,6 +8,7 @@ AQE handles post-shuffle coalescing and skew splits.
 from __future__ import annotations
 
 import os
+import re
 from typing import Optional
 
 from pyspark.sql import SparkSession
@@ -40,6 +41,15 @@ def get_spark(
       overhead at 64.
     - AQE on: coalesces small post-shuffle partitions and splits skewed
       ones at runtime — the salted url-hash shuffle benefits directly.
+    - On a local master the Python worker daemon is
+      :mod:`gocrd_spark.daemon`: it imports pyspark from its directory
+      install rather than Spark's zips, which pyspark re-reads on every
+      task (about 0.06-0.09 s a task). The workers there share the
+      driver's machine, working directory and ``PYTHONPATH``, which the
+      kernels already need to import ``gocrd_spark``. On a cluster the
+      daemon starts before any ``--py-files`` are on the path, so the
+      conf stays unset; set it through ``extra`` only where the
+      executors' own Python environment can import ``gocrd_spark``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     # shuffle/spill to tmpfs when available: this VM's root disk is slow and
@@ -66,6 +76,8 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    if re.fullmatch(r"local(\[[^\]]*\])?", master or "local"):
+        builder = builder.config("spark.python.daemon.module", "gocrd_spark.daemon")
     for key, value in (extra or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()

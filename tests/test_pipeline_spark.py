@@ -215,6 +215,15 @@ class TestBloomFilterUnprocessed:
         assert "BroadcastHashJoin" in plan
 
 
+def _group_table(output_dir: str, g: int) -> list[dict]:
+    """One commit group's rows of a resumable run, in file order."""
+    import pyarrow.parquet as pq
+
+    gdir = os.path.join(output_dir, "data", f"g={g}")
+    (name,) = [n for n in os.listdir(gdir) if not n.startswith(".")]
+    return pq.read_table(os.path.join(gdir, name)).to_pylist()
+
+
 class TestResume:
     def _write_input(self, spark, pages, tmp_path) -> str:
         path = str(tmp_path / "pages_in")
@@ -248,6 +257,81 @@ class TestResume:
         }
         assert resumed_rows == clean_rows
         assert len(resumed_rows) == N_DOCS
+
+    def test_resume_across_task_count(self, spark, pages, tmp_path, monkeypatch):
+        """The commit unit is a group, not a task: a crash under one task
+        count, resumed under another, gives the clean run's rows and the
+        clean run's per-group tables, row for row."""
+        import gocrd_spark.pipeline as pipeline
+
+        inp = self._write_input(spark, pages, tmp_path)
+        out = str(tmp_path / "out")
+        n_groups = 8
+
+        monkeypatch.setattr(pipeline, "_writer_tasks", lambda spark, n: 2)
+        with pytest.raises(Exception):
+            run_extract_job(spark, inp, out, n_groups=n_groups, fail_group=3)
+        done_after_crash = committed_groups(out)
+        assert 3 not in done_after_crash
+
+        monkeypatch.setattr(pipeline, "_writer_tasks", lambda spark, n: 3)
+        summary = run_extract_job(spark, inp, out, n_groups=n_groups)
+        assert summary["groups_previously_done"] == len(done_after_crash)
+        assert committed_groups(out) == set(range(n_groups))
+
+        monkeypatch.undo()
+        clean = str(tmp_path / "clean")
+        run_extract_job(spark, inp, clean, n_groups=n_groups)
+        resumed_rows = {
+            r.url: (r.text, r.error) for r in read_extracted(spark, out).collect()
+        }
+        clean_rows = {
+            r.url: (r.text, r.error) for r in read_extracted(spark, clean).collect()
+        }
+        assert resumed_rows == clean_rows
+        assert len(resumed_rows) == N_DOCS
+        for g in range(n_groups):
+            assert _group_table(out, g) == _group_table(clean, g)
+
+    def test_task_layout(self, spark, pages, tmp_path, monkeypatch):
+        """The writer stage runs min(n_groups, defaultParallelism) tasks,
+        not one per group, and each group is still one file whose row
+        count is its marker's input_rows."""
+        import json
+        import re
+
+        import pyarrow.parquet as pq
+
+        inp = self._write_input(spark, pages, tmp_path)
+        cores = spark.sparkContext.defaultParallelism
+        mapped = []
+        DataFrame = type(pages)
+        map_in_pandas = DataFrame.mapInPandas
+
+        def recording(self, *args, **kwargs):
+            mapped.append(map_in_pandas(self, *args, **kwargs))
+            return mapped[-1]
+
+        monkeypatch.setattr(DataFrame, "mapInPandas", recording)
+        for n_groups in (2, 8):
+            mapped.clear()
+            out = str(tmp_path / f"out_layout_{n_groups}")
+            run_extract_job(spark, inp, out, n_groups=n_groups)
+            (job,) = mapped
+            plan = job._jdf.queryExecution().executedPlan().toString()
+            # the final and the initial adaptive plan both list the Exchange
+            below_map = plan[plan.index("MapInPandas"):]
+            exchanges = re.findall(r"Exchange hashpartitioning\(g#\d+, (\d+)\)", below_map)
+            assert set(exchanges) == {str(min(n_groups, cores))}, plan
+
+            data = os.path.join(out, "data")
+            assert sorted(os.listdir(data)) == [f"g={g}" for g in range(n_groups)]
+            for g in range(n_groups):
+                (name,) = os.listdir(os.path.join(data, f"g={g}"))
+                with open(os.path.join(out, "_commits", f"g={g}.json")) as fh:
+                    marker = json.load(fh)
+                rows = pq.ParquetFile(os.path.join(data, f"g={g}", name)).metadata.num_rows
+                assert rows == marker["input_rows"] > 0
 
     def test_no_recompute_of_committed_groups(self, spark, pages, tmp_path):
         inp = self._write_input(spark, pages, tmp_path)
