@@ -23,6 +23,7 @@ Determinism: pure function of the bytes; no models, no randomness.
 
 from __future__ import annotations
 
+import re
 from html.parser import HTMLParser
 from typing import Any, Optional
 
@@ -171,6 +172,39 @@ def extract_html(
 
 
 # ---------------------------------------------------------------------------
+# start-tag guards of the single-purpose collectors
+# ---------------------------------------------------------------------------
+
+def _start_tag_guard(*tags: str) -> "re.Pattern[str]":
+    """Compiled search for what can make a collector's parser do
+    anything: a start tag named one of ``tags``, or ``<![``.
+
+    A collector that reacts only to ``tags`` gives its empty result on
+    decoded text where this finds nothing, so it returns that result
+    without running the tokenizer (PAGE-XML and METS payloads normally
+    hold none of them). The guard is exact, not a heuristic:
+
+    - ``html.parser`` reports a start tag only at ``<`` + ASCII letter,
+      with the name running to whitespace, ``/``, ``>`` or NUL and then
+      lowercased. So the tag needs ``<name`` literally in the text,
+      matched here case-insensitively (``re.I`` folds what ``str.lower``
+      folds, KELVIN SIGN included) and not continued by a name
+      character (``<Metadata`` in PAGE-XML is not ``<meta``).
+    - The one input on which ``html.parser`` raises is a marked section:
+      ``_markupbase.parse_marked_section`` and its name scan, reached
+      only through ``<![``. Such text still goes through the parser, so
+      ``<![foo[`` keeps its ``AssertionError`` error row.
+    """
+    names = "|".join(tags)
+    return re.compile(rf"<(?:!\[|(?:{names})(?![\w:.-]))", re.IGNORECASE)
+
+
+_META_GUARD = _start_tag_guard("html", "title", "meta", "link")
+_TABLE_GUARD = _start_tag_guard("table")
+_JSONLD_GUARD = _start_tag_guard("script")
+
+
+# ---------------------------------------------------------------------------
 # page metadata (head extraction tier)
 # ---------------------------------------------------------------------------
 
@@ -249,15 +283,30 @@ def robots_meta_flags(raw: Optional[str]) -> tuple[int, int]:
     return noindex, nofollow
 
 
+_NULL_META: dict[str, Any] = {
+    "title": None, "description": None, "canonical_url": None,
+    "og_title": None, "lang_attr": None, "robots": None,
+    "noindex": 0, "nofollow": 0, "error": None,
+}
+
+
 def page_meta(data: bytes) -> dict[str, Any]:
     """bytes -> head metadata dict: {title, description, canonical_url,
     og_title, lang_attr, robots, noindex 0/1, nofollow 0/1, error}.
     Non-HTML payloads yield all-null metadata with error=None — metadata
-    absence is data, not failure."""
+    absence is data, not failure.
+
+    Text without an ``<html``, ``<title``, ``<meta`` or ``<link`` start
+    tag (the only ones _MetaParser branches on) and without ``<![``
+    returns the all-null row without tokenizing (_start_tag_guard).
+    ``<![`` belongs in the guard because a marked section is the one
+    input on which the tokenizer raises, and that gives the error row."""
     try:
         from .charset import decode_bytes
 
         raw, _enc, _src = decode_bytes(data)
+        if not _META_GUARD.search(raw):
+            return dict(_NULL_META)
         p = _MetaParser()
         p.feed(raw)
         p.close()
@@ -274,11 +323,7 @@ def page_meta(data: bytes) -> dict[str, Any]:
             "error": None,
         }
     except Exception as exc:
-        return {
-            "title": None, "description": None, "canonical_url": None,
-            "og_title": None, "lang_attr": None, "robots": None,
-            "noindex": 0, "nofollow": 0, "error": stable_error(exc),
-        }
+        return {**_NULL_META, "error": stable_error(exc)}
 
 
 # ---------------------------------------------------------------------------
@@ -370,11 +415,19 @@ class _TableParser(HTMLParser):
 def extract_tables(data: bytes) -> dict[str, Any]:
     """bytes -> {'cells': [{table_idx,row_idx,col_idx,is_header,cell}],
     'error'}. A page with no <table> yields zero cells with error=None
-    — table absence is data, not failure (most of the web)."""
+    — table absence is data, not failure (most of the web).
+
+    _TableParser emits cells only under an open ``<table``, so text
+    without that start tag and without ``<![`` returns zero cells
+    without tokenizing (_start_tag_guard); ``<![`` is in the guard
+    because a marked section can make the tokenizer raise, and that
+    gives the error row."""
     try:
         from .charset import decode_bytes
 
         raw, _enc, _src = decode_bytes(data)
+        if not _TABLE_GUARD.search(raw):
+            return {"cells": [], "error": None}
         p = _TableParser()
         p.feed(raw)
         p.close()
@@ -482,11 +535,19 @@ class _JsonLdParser(HTMLParser):
 def extract_jsonld(data: bytes) -> dict[str, Any]:
     """bytes -> {'blocks': [raw json text, ...], 'error'} — one entry
     per ld+json script block in document order; pages without any
-    yield zero blocks with error=None."""
+    yield zero blocks with error=None.
+
+    Only a ``<script`` start tag opens a block, so text without one and
+    without ``<![`` returns zero blocks without tokenizing
+    (_start_tag_guard); ``<![`` is in the guard because a marked
+    section can make the tokenizer raise, and that gives the error
+    row."""
     try:
         from .charset import decode_bytes
 
         raw, _enc, _src = decode_bytes(data)
+        if not _JSONLD_GUARD.search(raw):
+            return {"blocks": [], "error": None}
         p = _JsonLdParser()
         p.feed(raw)
         p.close()

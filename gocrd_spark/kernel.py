@@ -178,11 +178,7 @@ def page_meta_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     partitioning; payload bytes never leave the task."""
     for pdf in batches:
         out = page_meta_batch(pdf)
-        out.insert(
-            1,
-            "warc_ts_epoch",
-            [None if pd.isna(ts) else int(ts) for ts in pdf["warc_ts_epoch"]],
-        )
+        out.insert(1, "warc_ts_epoch", pdf["warc_ts_epoch"].astype("Int64").array)
         yield out
 
 

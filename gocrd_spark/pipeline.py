@@ -26,8 +26,10 @@ import time
 import uuid
 from typing import Iterator, Optional
 
+import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -287,6 +289,12 @@ def _writer_tasks(spark: SparkSession, n_groups: int) -> int:
     return min(n_groups, spark.sparkContext.defaultParallelism)
 
 
+def _octet_lengths(values) -> np.ndarray:
+    """Byte length per value of an Arrow binary or string array (UTF-8
+    bytes for strings), 0 for null: the job's bytes_in/bytes_out."""
+    return pc.binary_length(values).fill_null(0).to_numpy()
+
+
 class _GroupFile:
     """One commit group's parquet file in the resumable job, written
     under a unique tmp name and published by rename.
@@ -486,10 +494,8 @@ def run_extract_job(
             result = extract_batch(pdf)
             table = pa.Table.from_pandas(result, schema=arrow_schema, preserve_index=False)
             err = result["error"].notna().to_numpy()
-            bytes_in = pdf["html"].map(
-                lambda b: len(b) if b is not None else 0).to_numpy()
-            bytes_out = result["text"].map(
-                lambda t: len(t.encode("utf-8")) if t is not None else 0).to_numpy()
+            bytes_in = _octet_lengths(pa.array(pdf["html"], type=pa.binary()))
+            bytes_out = _octet_lengths(table.column("text"))
             if emit_meta:
                 meta = pa.Table.from_pandas(
                     page_meta_batch(pdf), schema=meta_schema, preserve_index=False

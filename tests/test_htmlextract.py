@@ -1,5 +1,13 @@
 """HTML boilerplate-strip extractor + document-kind routing + PDF stub."""
 
+import re
+from unittest import mock
+
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
+
+from gocrd_spark import datagen, htmlextract
 from gocrd_spark.datagen import _fixture
 from gocrd_spark.extract import extract_any_document, extract_document
 from gocrd_spark.htmlextract import extract_html
@@ -435,3 +443,122 @@ class TestExtractJsonLd:
         assert by["u0"] == ("Article", "N")
         assert by["u1"] == (None, None)  # invalid JSON -> NULLs, no failure
         assert "u2" not in by  # no structured data -> zero rows
+
+
+# ---------------------------------------------------------------------------
+# start-tag guards: a guarded collector equals its parser on every input
+# ---------------------------------------------------------------------------
+
+_ALWAYS = re.compile("")  # a guard that lets every text through
+
+
+def _unguarded(collector: str, data: bytes) -> dict:
+    """The collector with its guard patched to match everything, so the
+    parser runs on every input: the definition the guard must keep."""
+    guard = {
+        "page_meta": "_META_GUARD",
+        "extract_tables": "_TABLE_GUARD",
+        "extract_jsonld": "_JSONLD_GUARD",
+    }[collector]
+    with mock.patch.object(htmlextract, guard, _ALWAYS):
+        return getattr(htmlextract, collector)(data)
+
+
+def _any_case(name: str):
+    """``name`` with each letter in either case; ``k`` may also be the
+    KELVIN SIGN, which str.lower folds to ``k``."""
+    return st.tuples(*[
+        st.sampled_from([c.lower(), c.upper()] + (["\u212a"] if c == "k" else []))
+        for c in name
+    ]).map("".join)
+
+
+# each trigger in an element its collector reacts to
+_TRIGGERS = st.one_of(
+    _any_case("html").map(lambda t: f'<{t} lang="de-AT">'),
+    _any_case("title").map(lambda t: f"<{t}> A &amp; b </title>"),
+    _any_case("title").map(lambda t: f"<{t}/>"),
+    st.tuples(
+        _any_case("meta"),
+        st.sampled_from([
+            'name="description" content=" d  e "', "name=ROBOTS content=noindex",
+            'property="og:title" content="og"', 'name="description"',
+        ]),
+    ).map(lambda p: f"<{p[0]} {p[1]}>"),
+    _any_case("link").map(lambda t: f'<{t} rel="alternate Canonical" href=" https://c.test/ ">'),
+    _any_case("table").map(lambda t: f"<{t}><tr><th>h<td> c </td></tr>"),
+    _any_case("script").map(
+        lambda t: f'<{t} type="application/ld+json">{{"@type":"T"}}</script>'),
+)
+_WRAPPERS = st.sampled_from([
+    "{}", "{}", "<!-- {} -->", "<![CDATA[{}]]>", "<![if mso]>{}<![endif]>",
+    "<script>{}</script>", "<style>{}</style>", "<textarea>{}</textarea>",
+])
+# near misses and the constructs the tokenizer treats specially
+_OTHER = st.sampled_from([
+    "<Metadata>", "<metas x=1>", "<titles>", "<mods:title>", "<link-x>",
+    "<htmlx>", "<tablex>", "<scripts>", "< title>", "&lt;title&gt;",
+    "</title>", "</table>", "</script>", "<tr>", "<td>x", "<th>",
+    "<![foo[ x", "<![", "<![CDATA[x]]>", "<!-- c -->", "<!-- <title>c",
+    "<!DOCTYPE html>", "<?xml version='1.0'?>", "<p>text</p>", "<", ">",
+    "&amp;", "\x00", "\u212a",
+])
+_TEXT = st.text(alphabet=st.sampled_from(list("ab <>/=\"'!-[]")), max_size=12)
+_PIECE = st.one_of(
+    st.tuples(_WRAPPERS, _TRIGGERS).map(lambda p: p[0].format(p[1])), _OTHER, _TEXT,
+)
+_CODECS = ("utf-8", "utf-8-sig", "utf-16", "cp1252")
+_DOCS = st.one_of(
+    st.integers(0, 499).map(lambda i: datagen.make_row(i)["html"]),
+    st.tuples(st.lists(_PIECE, max_size=6).map("".join), st.sampled_from(_CODECS)).map(
+        lambda p: p[0].encode(p[1], errors="replace")),
+    st.just(b""),
+)
+
+
+class TestStartTagGuards:
+    """A collector that skips the tokenizer when its guard finds nothing
+    gives what the tokenizer gives, on every input. The examples hold
+    each trigger alone and ``<![`` alone, so dropping any of them from
+    a guard fails here."""
+
+    @pytest.mark.parametrize("collector", ["page_meta", "extract_tables", "extract_jsonld"])
+    @settings(max_examples=150, deadline=None)
+    @given(data=_DOCS)
+    @example(data=b'<HTML lang="de">')
+    @example(data=b"<tItLe>t</TITLE>")
+    @example(data=b'<Meta name="description" content="d">')
+    @example(data='<lin\u212a rel="canonical" href="https://k.test/">'.encode())
+    @example(data=b"<TaBle><td>c")
+    @example(data=b'<SCRIPT type="application/ld+json">{}</script>')
+    @example(data=b"<![foo[ x")
+    @example(data=b"<![CDATA[<title>t</title><table><td>c]]>")
+    @example(data="<title>t</title><table><td>\xe9".encode("utf-16"))
+    @example(data=b"")
+    def test_guarded_equals_unguarded(self, collector, data):
+        assert getattr(htmlextract, collector)(data) == _unguarded(collector, data)
+
+    @pytest.mark.parametrize("collector", ["page_meta", "extract_tables", "extract_jsonld"])
+    def test_marked_section_keeps_error_row(self, collector):
+        result = getattr(htmlextract, collector)(b"<p>x</p><![foo[ y")
+        assert result["error"].startswith("AssertionError: unknown status keyword")
+
+    def test_page_meta_batch_sf001_equals_unguarded(self):
+        """The kernel over the sf0.01 pages table (1 000 datagen rows)
+        equals the unguarded kernel row for row, and the guard skips
+        the tokenizer on most of them (the PAGE-XML and METS rows)."""
+        import pandas as pd
+
+        from gocrd_spark.charset import decode_bytes
+        from gocrd_spark.kernel import page_meta_batch
+
+        pdf = datagen.pages_pdf(1000)
+        got = page_meta_batch(pdf)
+        with mock.patch.object(htmlextract, "_META_GUARD", _ALWAYS):
+            want = page_meta_batch(pdf)
+        pd.testing.assert_frame_equal(got, want)
+        skipped = sum(
+            htmlextract._META_GUARD.search(decode_bytes(bytes(h))[0]) is None
+            for h in pdf["html"]
+        )
+        assert skipped >= 800

@@ -363,6 +363,33 @@ class TestResume:
         assert summary["err_rows"] >= 1
         assert summary["bytes_in"] > summary["bytes_out"] > 0
 
+    def test_marker_bytes_equal_group_octet_lengths(self, spark, pages, tmp_path):
+        """Each commit marker's bytes_in is its group's summed
+        octet_length(html), and bytes_out the summed UTF-8 length of
+        the text it wrote (0 for error rows)."""
+        from pyspark.sql import functions as F
+
+        from gocrd_spark.kernel import group_id
+        from gocrd_spark.pipeline import read_commit_stats
+
+        inp = self._write_input(spark, pages, tmp_path)
+        out = str(tmp_path / "out_bytes")
+        run_extract_job(spark, inp, out, n_groups=4)
+
+        def summed(df, col):
+            rows = df.groupBy("g").agg(
+                F.sum(F.coalesce(F.octet_length(col), F.lit(0))).alias("n")
+            ).collect()
+            return {r.g: r.n for r in rows}
+
+        want_in = summed(
+            spark.read.parquet(inp).withColumn("g", group_id(4, 42)), "html")
+        want_out = summed(read_extracted(spark, out), "text")
+        markers = read_commit_stats(out)
+        assert {m["g"]: m["bytes_in"] for m in markers} == want_in
+        assert {m["g"]: m["bytes_out"] for m in markers} == want_out
+        assert all(want_out[g] > 0 for g in want_out)
+
 
 class TestJobMetadataSideTable:
     def test_meta_table_written_same_pass_and_resume_safe(self, spark, pages, tmp_path):
@@ -393,6 +420,23 @@ class TestJobMetadataSideTable:
         again = run_extract_job(spark, inp, out, n_groups=4, with_metadata=True)
         assert again["groups_committed_this_run"] == 0
         assert read_metadata(spark, out).count() == pages.count()
+
+
+def test_page_metadata_null_warc_ts(spark):
+    """A page without a timestamp keeps a null warc_ts_epoch; the others
+    carry their epoch seconds."""
+    from gocrd_spark.pipeline import page_metadata
+
+    rows = [datagen.make_row(i) for i in (3, 4, 13)]
+    rows[1]["warc_ts"] = None
+    df = spark.createDataFrame(rows, schema=datagen.PAGES_SCHEMA)
+    got = {r.url: r.warc_ts_epoch for r in page_metadata(df).collect()}
+    want = {
+        r["url"]: None if r["warc_ts"] is None else int(r["warc_ts"].timestamp())
+        for r in rows
+    }
+    assert got == want
+    assert got[rows[1]["url"]] is None
 
 
 class TestExtractionReport:
