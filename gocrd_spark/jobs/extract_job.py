@@ -45,9 +45,14 @@ def main(argv: list[str] | None = None) -> int:
             except ValueError:
                 parser.error(f"--{name.replace('_', '-')}: not an ISO timestamp: {value!r}")
 
+    from pyspark.sql import SparkSession
+
     from gocrd_spark.pipeline import run_extract_job
     from gocrd_spark.session import get_spark
 
+    # only stop a session this job created: a host process with a live
+    # session gets it back from getOrCreate, and it must survive the call
+    owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(master=args.master, app_name="gocrd-extract")
     try:
         summary = run_extract_job(
@@ -64,7 +69,8 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(summary))
         return 0
     finally:
-        spark.stop()
+        if owns_session:
+            spark.stop()
 
 
 if __name__ == "__main__":

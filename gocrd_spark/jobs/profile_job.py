@@ -46,9 +46,14 @@ def main(argv: list[str] | None = None) -> int:
     r.add_argument("--terms", default="", help="comma-separated CMS probes")
     args = parser.parse_args(argv)
 
+    from pyspark.sql import SparkSession
+
     from gocrd_spark.operators import sketch
     from gocrd_spark.session import get_spark
 
+    # only stop a session this job created: a host process with a live
+    # session gets it back from getOrCreate, and it must survive the call
+    owns_session = SparkSession.getActiveSession() is None
     spark = get_spark(app_name=f"gocrd-profile-{args.cmd}")
     try:
         if args.cmd == "build":
@@ -87,7 +92,8 @@ def main(argv: list[str] | None = None) -> int:
                 }
             print(json.dumps(out, sort_keys=True))
     finally:
-        spark.stop()
+        if owns_session:
+            spark.stop()
     return 0
 
 

@@ -3,13 +3,15 @@
 Everything here is ``mapInPandas``-shaped (iterator of pandas DataFrames
 in, iterator out): zero per-row Python UDFs (north rule). The kernels
 call the pure-Python document model (gocrd_spark.extract), which is unit
-tested without Spark; this module only adds batching, schema shaping and
-per-partition counters.
+tested without Spark; this module only adds batching and schema shaping.
+Every (url, html) kernel is a per-document row function run by one
+fan-out loop, ``_fan_out``.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Optional
+from operator import itemgetter
+from typing import Callable, Iterable, Iterator, Optional
 
 import pandas as pd
 
@@ -68,6 +70,29 @@ METS_FILES_SCHEMA = StructType(
 )
 
 
+def _fan_out(
+    pdf: pd.DataFrame,
+    columns: list[str],
+    rows_of: Callable[[bytes], Iterable[tuple]],
+) -> pd.DataFrame:
+    """The one per-page loop of every (url, html) kernel: ``rows_of``
+    maps a document's bytes (a null html reads as ``b""``) to its output
+    rows, each a tuple of the values after ``url``, which repeats on
+    every row. One Python list per column, so pandas infers each dtype
+    from the values; an empty batch still has every column."""
+    out: dict[str, list] = {c: [] for c in columns}
+    urls, *values = out.values()
+    for url, html in zip(pdf["url"], pdf["html"]):
+        for row in rows_of(bytes(html) if html is not None else b""):
+            urls.append(url)
+            for col, value in zip(values, row):
+                col.append(value)
+    return pd.DataFrame(out)
+
+
+_EXTRACTED = itemgetter("text", "spans", "error")
+
+
 def extract_batch(pdf: pd.DataFrame, max_doc_bytes: Optional[int] = None) -> pd.DataFrame:
     """One Arrow batch of (url, html) -> (url, text, spans, error).
 
@@ -76,36 +101,28 @@ def extract_batch(pdf: pd.DataFrame, max_doc_bytes: Optional[int] = None) -> pd.
     ``max_doc_bytes`` guards executor memory at crawl scale: a
     pathological multi-GB document becomes an error row instead of an
     OOM-killed worker."""
-    out = {"url": [], "text": [], "spans": [], "error": []}
-    for url, html in zip(pdf["url"], pdf["html"]):
-        data = bytes(html) if html is not None else b""
+
+    def rows(data: bytes):
         if max_doc_bytes is not None and len(data) > max_doc_bytes:
-            out["url"].append(url)
-            out["text"].append(None)
-            out["spans"].append(None)
-            out["error"].append(
-                f"document too large: {len(data)} > max_doc_bytes={max_doc_bytes}"
-            )
-            continue
-        result = extract_any_document(data)
-        out["url"].append(url)
-        out["text"].append(result["text"])
-        out["spans"].append(result["spans"])
-        out["error"].append(result["error"])
-    return pd.DataFrame(out)
+            error = f"document too large: {len(data)} > max_doc_bytes={max_doc_bytes}"
+            return [(None, None, error)]
+        return [_EXTRACTED(extract_any_document(data))]
+
+    return _fan_out(pdf, EXTRACTED_SCHEMA.fieldNames(), rows)
 
 
-def extract_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        yield extract_batch(pdf)
+def extract_kernel(max_doc_bytes: Optional[int] = None):
+    """The extraction kernel over extract_batch; ``max_doc_bytes=None``
+    runs without the size guard."""
 
-
-def extract_kernel_factory(max_doc_bytes: Optional[int] = None):
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            yield extract_batch(pdf, max_doc_bytes=max_doc_bytes)
+            yield extract_batch(pdf, max_doc_bytes)
 
-    return kernel
+    return extract
+
+
+_METS_FILE = itemgetter("file_id", "mimetype", "flocat_type", "flocat_url")
 
 
 def mets_kernel_factory(use: str = "", file_id: str = "", mimetype: str = ""):
@@ -113,22 +130,13 @@ def mets_kernel_factory(use: str = "", file_id: str = "", mimetype: str = ""):
     the predicate pushed into the tree walk — rows that match nothing
     emit nothing (UDTF-shaped)."""
 
+    def rows(data: bytes):
+        found = mets_records(data, use=use, file_id=file_id, mimetype=mimetype)
+        return map(_METS_FILE, found)
+
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in ("url", "file_id", "mimetype", "flocat_type", "flocat_url")}
-            for url, html in zip(pdf["url"], pdf["html"]):
-                for rec in mets_records(
-                    bytes(html) if html is not None else b"",
-                    use=use,
-                    file_id=file_id,
-                    mimetype=mimetype,
-                ):
-                    out["url"].append(url)
-                    out["file_id"].append(rec["file_id"])
-                    out["mimetype"].append(rec["mimetype"])
-                    out["flocat_type"].append(rec["flocat_type"])
-                    out["flocat_url"].append(rec["flocat_url"])
-            yield pd.DataFrame(out)
+            yield _fan_out(pdf, METS_FILES_SCHEMA.fieldNames(), rows)
 
     return kernel
 
@@ -149,10 +157,10 @@ PAGE_META_SCHEMA = StructType(
     ]
 )
 
-_PAGE_META_FIELDS = (
-    "title", "description", "canonical_url", "og_title",
-    "lang_attr", "robots", "noindex", "nofollow", "error",
+_PAGE_META_FIELDS = tuple(
+    n for n in PAGE_META_SCHEMA.fieldNames() if n not in ("url", "warc_ts_epoch")
 )
+_PAGE_META = itemgetter(*_PAGE_META_FIELDS)
 
 
 def page_meta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -161,14 +169,9 @@ def page_meta_batch(pdf: pd.DataFrame) -> pd.DataFrame:
     (page_meta_kernel) and the resumable job's metadata side table."""
     from .htmlextract import page_meta
 
-    out: dict[str, list] = {"url": []}
-    out.update({k: [] for k in _PAGE_META_FIELDS})
-    for url, html in zip(pdf["url"], pdf["html"]):
-        meta = page_meta(bytes(html) if html is not None else b"")
-        out["url"].append(url)
-        for k in _PAGE_META_FIELDS:
-            out[k].append(meta[k])
-    return pd.DataFrame(out)
+    return _fan_out(
+        pdf, ["url", *_PAGE_META_FIELDS], lambda data: [_PAGE_META(page_meta(data))]
+    )
 
 
 def page_meta_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -210,6 +213,9 @@ FEED_ITEMS_SCHEMA = StructType(
 )
 
 
+_FEED_ITEM = itemgetter("idx", "title", "link", "published", "summary")
+
+
 def feed_items_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """(url, html) -> one row per feed ITEM (gocrd_spark.feed.parse_feed);
     non-feed / unparseable payloads emit one all-null row with the error
@@ -217,23 +223,14 @@ def feed_items_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]
     map, no shuffle; item fan-out happens inside the task."""
     from .feed import parse_feed
 
-    cols = list(FEED_ITEMS_SCHEMA.fieldNames())
+    def rows(data: bytes):
+        p = parse_feed(data)
+        for item in p["items"] or [None]:
+            values = (None,) * 5 if item is None else _FEED_ITEM(item)
+            yield (p["feed_type"], p["feed_title"], *values, p["error"])
+
     for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = parse_feed(bytes(html) if html is not None else b"")
-            rows = parsed["items"] or [None]
-            for item in rows:
-                out["url"].append(url)
-                out["feed_type"].append(parsed["feed_type"])
-                out["feed_title"].append(parsed["feed_title"])
-                out["item_idx"].append(None if item is None else item["idx"])
-                out["item_title"].append(None if item is None else item["title"])
-                out["item_link"].append(None if item is None else item["link"])
-                out["item_published"].append(None if item is None else item["published"])
-                out["item_summary"].append(None if item is None else item["summary"])
-                out["error"].append(parsed["error"])
-        yield pd.DataFrame(out)
+        yield _fan_out(pdf, FEED_ITEMS_SCHEMA.fieldNames(), rows)
 
 
 SITEMAP_URLS_SCHEMA = StructType(
@@ -250,28 +247,23 @@ SITEMAP_URLS_SCHEMA = StructType(
 )
 
 
+_SITEMAP_ENTRY = itemgetter("idx", "loc", "lastmod", "changefreq", "priority")
+
+
 def sitemap_urls_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     """(url, html) -> one row per sitemap ENTRY (feed.parse_sitemap);
     non-sitemap payloads emit one all-null row with the error string.
     Narrow map, no shuffle — same contract as feed_items_kernel."""
     from .feed import parse_sitemap
 
-    cols = list(SITEMAP_URLS_SCHEMA.fieldNames())
+    def rows(data: bytes):
+        p = parse_sitemap(data)
+        for entry in p["entries"] or [None]:
+            values = (None,) * 5 if entry is None else _SITEMAP_ENTRY(entry)
+            yield (p["kind"], *values, p["error"])
+
     for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = parse_sitemap(bytes(html) if html is not None else b"")
-            rows = parsed["entries"] or [None]
-            for ent in rows:
-                out["url"].append(url)
-                out["kind"].append(parsed["kind"])
-                out["entry_idx"].append(None if ent is None else ent["idx"])
-                out["loc"].append(None if ent is None else ent["loc"])
-                out["lastmod"].append(None if ent is None else ent["lastmod"])
-                out["changefreq"].append(None if ent is None else ent["changefreq"])
-                out["priority"].append(None if ent is None else ent["priority"])
-                out["error"].append(parsed["error"])
-        yield pd.DataFrame(out)
+        yield _fan_out(pdf, SITEMAP_URLS_SCHEMA.fieldNames(), rows)
 
 
 HTML_TABLES_SCHEMA = StructType(
@@ -294,19 +286,10 @@ def html_tables_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame
     task, payload bytes never move."""
     from .htmlextract import extract_tables
 
-    cols = list(HTML_TABLES_SCHEMA.fieldNames())
+    columns = HTML_TABLES_SCHEMA.fieldNames()
+    cell = itemgetter(*columns[1:])
     for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = extract_tables(bytes(html) if html is not None else b"")
-            for cell in parsed["cells"]:
-                out["url"].append(url)
-                out["table_idx"].append(cell["table_idx"])
-                out["row_idx"].append(cell["row_idx"])
-                out["col_idx"].append(cell["col_idx"])
-                out["is_header"].append(cell["is_header"])
-                out["cell"].append(cell["cell"])
-        yield pd.DataFrame(out)
+        yield _fan_out(pdf, columns, lambda data: map(cell, extract_tables(data)["cells"]))
 
 
 JSONLD_BLOCKS_SCHEMA = StructType(
@@ -324,13 +307,9 @@ def jsonld_blocks_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
     data contribute zero rows. Narrow map, no shuffle."""
     from .htmlextract import extract_jsonld
 
-    cols = list(JSONLD_BLOCKS_SCHEMA.fieldNames())
     for pdf in batches:
-        out: dict[str, list] = {k: [] for k in cols}
-        for url, html in zip(pdf["url"], pdf["html"]):
-            parsed = extract_jsonld(bytes(html) if html is not None else b"")
-            for i, block in enumerate(parsed["blocks"]):
-                out["url"].append(url)
-                out["block_idx"].append(i)
-                out["json"].append(block)
-        yield pd.DataFrame(out)
+        yield _fan_out(
+            pdf,
+            JSONLD_BLOCKS_SCHEMA.fieldNames(),
+            lambda data: enumerate(extract_jsonld(data)["blocks"]),
+        )

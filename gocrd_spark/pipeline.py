@@ -5,7 +5,7 @@ Shape (SURVEY.md §3.2, §4.3-§4.4): one columnar narrow map.
     pages (Iceberg/parquet scan; column-pruned to url+html,
            partition-pruned on warc_ts)
       -> [optional] salted repartition by xxhash64(url, salt)   # the ONE wide shuffle
-      -> mapInPandas(extract_kernel)                            # Arrow batches, zero per-row Python
+      -> mapInPandas(extract_kernel(...))                       # Arrow batches, zero per-row Python
       -> parquet/Iceberg sink (resumable mode: executor-side
          per-commit-group writes + commit log)
 
@@ -34,9 +34,15 @@ import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
-from .kernel import EXTRACTED_SCHEMA, METS_FILES_SCHEMA, extract_batch, extract_kernel
-from .kernel import group_id, mets_kernel_factory
+from .kernel import EXTRACTED_SCHEMA, FEED_ITEMS_SCHEMA, HTML_TABLES_SCHEMA
+from .kernel import JSONLD_BLOCKS_SCHEMA, METS_FILES_SCHEMA, PAGE_META_SCHEMA
+from .kernel import SITEMAP_URLS_SCHEMA, extract_batch, extract_kernel
+from .kernel import feed_items_kernel, group_id, html_tables_kernel
+from .kernel import jsonld_blocks_kernel, mets_kernel_factory, page_meta_batch
+from .kernel import page_meta_kernel, salted_partition_key, sitemap_urls_kernel
 from .session import ARROW_BATCH_ROWS
 
 
@@ -138,66 +144,41 @@ def extract_pages(
     ``max_doc_bytes`` converts pathologically large payloads into error
     rows before parsing (executor OOM guard).
     """
-    from .kernel import extract_kernel_factory, salted_partition_key
-
-    kernel = (
-        extract_kernel_factory(max_doc_bytes) if max_doc_bytes else extract_kernel
-    )
+    kernel = extract_kernel(max_doc_bytes or None)
+    key = salted_partition_key(salt)
     sel = df.select("url", "html")
+    big = None
     if oversize_bytes:
-        key = salted_partition_key(salt)
         size = F.coalesce(F.octet_length("html"), F.lit(0))  # null html -> small tier
-        small = sel.filter(size <= oversize_bytes)
-        if num_partitions:
-            small = small.repartition(num_partitions, key)
-        # With num_partitions=None the small tier stays a SHUFFLE-FREE
-        # narrow map on the scan's own splits — at 100 TB a blanket
-        # payload shuffle is the single most expensive op in the plan
-        # (measured on the bench box: -23% throughput at 8 cores and
-        # 2->8 scaling 0.85 vs 0.94 without, BENCH.md run F) — while the
-        # oversize TAIL (a sliver of rows) still gets its own shuffle so
-        # giant documents cannot straggle a scan partition.
+        # the oversize tail (a sliver of rows) alone pays a shuffle, so
+        # giant documents cannot straggle a scan partition
         big = sel.filter(size > oversize_bytes).repartition(
             max((num_partitions or sel.sparkSession.sparkContext.defaultParallelism) // 4, 1),
             key,
         )
-        return small.mapInPandas(kernel, EXTRACTED_SCHEMA).unionByName(
-            big.mapInPandas(kernel, EXTRACTED_SCHEMA)
-        )
+        sel = sel.filter(size <= oversize_bytes)
     if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(kernel, EXTRACTED_SCHEMA)
+        sel = sel.repartition(num_partitions, key)
+    out = sel.mapInPandas(kernel, EXTRACTED_SCHEMA)
+    return out if big is None else out.unionByName(big.mapInPandas(kernel, EXTRACTED_SCHEMA))
 
 
-def page_metadata(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def page_metadata(df: DataFrame) -> DataFrame:
     """Head-metadata extraction tier: (url, warc_ts, html) ->
     (url, warc_ts_epoch, title, description, canonical_url, og_title,
     lang_attr, robots, noindex, nofollow, error) via the page_meta
     Arrow batch kernel (htmlextract._MetaParser). Same plan shape as
-    extract_pages: column-pruned scan -> narrow mapInPandas; optional
-    salted repartition for skewed inputs. Non-HTML payloads (PAGE-XML,
-    METS, garbage) produce all-null metadata rows, not errors — at
-    crawl scale absence of a <title> is data the curation tier filters
-    on, not a failure path."""
-    from .kernel import PAGE_META_SCHEMA, page_meta_kernel, salted_partition_key
-
+    extract_pages: column-pruned scan -> narrow mapInPandas. Non-HTML
+    payloads (PAGE-XML, METS, garbage) produce all-null metadata rows,
+    not errors — at crawl scale absence of a <title> is data the
+    curation tier filters on, not a failure path."""
     sel = df.select(
         "url", F.unix_timestamp("warc_ts").alias("warc_ts_epoch"), "html"
     )
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
     return sel.mapInPandas(page_meta_kernel, PAGE_META_SCHEMA)
 
 
-def feed_items(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def feed_items(df: DataFrame) -> DataFrame:
     """Syndication extraction tier: (url, html) -> one row per RSS/Atom
     feed ITEM (url, feed_type, feed_title, item_idx, item_title,
     item_link, item_published, item_summary, error) via the
@@ -208,31 +189,17 @@ def feed_items(
     bytes never move. Non-feed payloads produce one all-null row with
     the error string — at crawl scale "not a feed" is data the
     discovery tier filters on, not a failure path."""
-    from .kernel import FEED_ITEMS_SCHEMA, feed_items_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(feed_items_kernel, FEED_ITEMS_SCHEMA)
+    return df.select("url", "html").mapInPandas(feed_items_kernel, FEED_ITEMS_SCHEMA)
 
 
-def sitemap_urls(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def sitemap_urls(df: DataFrame) -> DataFrame:
     """Sitemap-protocol extraction tier: (url, html) -> one row per
     <urlset>/<sitemapindex> entry (url, kind, entry_idx, loc, lastmod,
     changefreq, priority, error) via the sitemap_urls_kernel Arrow batch
     kernel (gocrd_spark/feed.py::parse_sitemap, the namespace-blind
     xmlwalk walker). Same narrow no-shuffle plan shape as feed_items;
     chain after robots_sitemaps discovery to seed the frontier."""
-    from .kernel import SITEMAP_URLS_SCHEMA, salted_partition_key, sitemap_urls_kernel
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(sitemap_urls_kernel, SITEMAP_URLS_SCHEMA)
+    return df.select("url", "html").mapInPandas(sitemap_urls_kernel, SITEMAP_URLS_SCHEMA)
 
 
 def mets_files(
@@ -336,6 +303,17 @@ class _GroupFile:
         os.replace(self.tmp, self.final)  # atomic on one filesystem
 
 
+# the resumable job's files: its data and meta tables, typed from the
+# Spark schemas (the job does not carry warc_ts_epoch), and one counter
+# record per commit group
+_DATA_ARROW_SCHEMA = to_arrow_schema(EXTRACTED_SCHEMA)
+_META_ARROW_SCHEMA = to_arrow_schema(
+    StructType([f for f in PAGE_META_SCHEMA.fields if f.name != "warc_ts_epoch"])
+)
+_COUNTERS = ("input_rows", "ok_rows", "err_rows", "bytes_in", "bytes_out")
+_SUMMARY_FIELDS = ("g", *_COUNTERS, "wall_ms")
+
+
 def run_extract_job(
     spark: SparkSession,
     input_path: str,
@@ -393,21 +371,26 @@ def run_extract_job(
     # it: group id = pmod(xxhash64(url, salt), n_groups). Pin (n_groups,
     # salt) in a manifest and refuse to resume under different values —
     # otherwise committed ids would be reinterpreted against a different
-    # layout, silently skipping or duplicating rows.
+    # layout, silently skipping or duplicating rows. with_metadata is
+    # pinned too: groups committed without the meta table would be
+    # missing from meta/ after a resume that turns it on, and the reverse
+    # leaves meta/ partial. A manifest without the key was written
+    # without metadata.
+    layout = {"n_groups": n_groups, "salt": salt, "with_metadata": with_metadata}
     manifest_path = os.path.join(_commit_dir(output_dir), "manifest.json")
     if os.path.exists(manifest_path):
         with open(manifest_path) as fh:
-            manifest = json.load(fh)
-        if manifest["n_groups"] != n_groups or manifest["salt"] != salt:
+            manifest = {"with_metadata": False, **json.load(fh)}
+        if any(manifest[k] != v for k, v in layout.items()):
+            written = ", ".join(f"{k}={manifest[k]}" for k in layout)
+            got = ", ".join(f"{k}={v}" for k, v in layout.items())
             raise ValueError(
-                f"resume mismatch: output was written with n_groups="
-                f"{manifest['n_groups']}, salt={manifest['salt']}; got "
-                f"n_groups={n_groups}, salt={salt}"
+                f"resume mismatch: output was written with {written}; got {got}"
             )
     else:
         tmp = manifest_path + f".{uuid.uuid4().hex}.tmp"
         with open(tmp, "w") as fh:
-            json.dump({"n_groups": n_groups, "salt": salt}, fh)
+            json.dump(layout, fh)
         os.replace(tmp, manifest_path)
 
     done = committed_groups(output_dir)
@@ -426,51 +409,6 @@ def run_extract_job(
     emit_meta = with_metadata
 
     def writer_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .kernel import page_meta_batch
-
-        arrow_schema = pa.schema(
-            [
-                pa.field("url", pa.string()),
-                pa.field("text", pa.string()),
-                pa.field(
-                    "spans",
-                    pa.list_(
-                        pa.struct(
-                            [
-                                pa.field("region_id", pa.string()),
-                                pa.field("index", pa.int64()),
-                                pa.field("byte_start", pa.int64()),
-                                pa.field("byte_end", pa.int64()),
-                                pa.field("char_start", pa.int64()),
-                                pa.field("char_end", pa.int64()),
-                                pa.field(
-                                    "bbox",
-                                    pa.struct(
-                                        [
-                                            pa.field("x0", pa.int64()),
-                                            pa.field("y0", pa.int64()),
-                                            pa.field("x1", pa.int64()),
-                                            pa.field("y1", pa.int64()),
-                                        ]
-                                    ),
-                                ),
-                            ]
-                        )
-                    ),
-                ),
-                pa.field("error", pa.string()),
-            ]
-        )
-        meta_schema = pa.schema(
-            [pa.field("url", pa.string())]
-            + [
-                pa.field(n, pa.string())
-                for n in ("title", "description", "canonical_url",
-                          "og_title", "lang_attr", "robots")
-            ]
-            + [pa.field("noindex", pa.int64()), pa.field("nofollow", pa.int64()),
-               pa.field("error", pa.string())]
-        )
         # state per commit group seen in this task
         writers: dict[int, tuple] = {}  # g -> (_GroupFile, stats)
         meta_writers: dict[int, _GroupFile] = {}
@@ -478,11 +416,10 @@ def run_extract_job(
 
         def get_writer(g: int):
             if g not in writers:
-                stats = {"g": g, "input_rows": 0, "ok_rows": 0, "err_rows": 0,
-                         "bytes_in": 0, "bytes_out": 0}
-                writers[g] = (_GroupFile(data_dir, g, arrow_schema), stats)
+                stats = {"g": g, **dict.fromkeys(_COUNTERS, 0)}
+                writers[g] = (_GroupFile(data_dir, g, _DATA_ARROW_SCHEMA), stats)
                 if emit_meta:
-                    meta_writers[g] = _GroupFile(meta_dir, g, meta_schema)
+                    meta_writers[g] = _GroupFile(meta_dir, g, _META_ARROW_SCHEMA)
             return writers[g]
 
         for pdf in batches:
@@ -492,13 +429,15 @@ def run_extract_job(
             if inject_fail is not None and inject_fail in groups:
                 raise RuntimeError(f"injected failure for group {inject_fail}")
             result = extract_batch(pdf)
-            table = pa.Table.from_pandas(result, schema=arrow_schema, preserve_index=False)
+            table = pa.Table.from_pandas(
+                result, schema=_DATA_ARROW_SCHEMA, preserve_index=False
+            )
             err = result["error"].notna().to_numpy()
             bytes_in = _octet_lengths(pa.array(pdf["html"], type=pa.binary()))
             bytes_out = _octet_lengths(table.column("text"))
             if emit_meta:
                 meta = pa.Table.from_pandas(
-                    page_meta_batch(pdf), schema=meta_schema, preserve_index=False
+                    page_meta_batch(pdf), schema=_META_ARROW_SCHEMA, preserve_index=False
                 )
             for g_value, rows in groups.items():
                 g = int(g_value)
@@ -527,27 +466,17 @@ def run_extract_job(
                 json.dump(stats, fh)
             os.replace(marker_tmp, marker)
             summaries.append(stats)
-        yield pd.DataFrame(
-            summaries
-            or {k: [] for k in ("g", "input_rows", "ok_rows", "err_rows",
-                                 "bytes_in", "bytes_out", "wall_ms")}
-        )
+        yield pd.DataFrame(summaries, columns=list(_SUMMARY_FIELDS))
 
-    summary_schema = (
-        "g int, input_rows long, ok_rows long, err_rows long, "
-        "bytes_in long, bytes_out long, wall_ms long"
+    summary_schema = ", ".join(
+        f"{k} {'int' if k == 'g' else 'long'}" for k in _SUMMARY_FIELDS
     )
     stats_rows = df.mapInPandas(writer_kernel, summary_schema).collect()
-    agg = {
+    return {
         "groups_committed_this_run": len(stats_rows),
         "groups_previously_done": len(done),
-        "input_rows": sum(r.input_rows for r in stats_rows),
-        "ok_rows": sum(r.ok_rows for r in stats_rows),
-        "err_rows": sum(r.err_rows for r in stats_rows),
-        "bytes_in": sum(r.bytes_in for r in stats_rows),
-        "bytes_out": sum(r.bytes_out for r in stats_rows),
+        **{k: sum(r[k] for r in stats_rows) for k in _COUNTERS},
     }
-    return agg
 
 
 def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
@@ -720,30 +649,17 @@ def golden_compare(extracted: DataFrame, golden: DataFrame) -> DataFrame:
     )
 
 
-def html_tables(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def html_tables(df: DataFrame) -> DataFrame:
     """Structured-data mining tier: (url, html) -> one row per <table>
     CELL (url, table_idx, row_idx, col_idx, is_header, cell) via the
     html_tables_kernel Arrow batch kernel (htmlextract._TableParser —
     tag-soup-tolerant implied closes, nested-table isolation). Same
     column-pruned scan -> narrow mapInPandas plan shape as
     page_metadata/feed_items; pages without tables emit zero rows."""
-    from .kernel import HTML_TABLES_SCHEMA, html_tables_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(html_tables_kernel, HTML_TABLES_SCHEMA)
+    return df.select("url", "html").mapInPandas(html_tables_kernel, HTML_TABLES_SCHEMA)
 
 
-def jsonld_blocks(
-    df: DataFrame,
-    salt: int = 42,
-    num_partitions: Optional[int] = None,
-) -> DataFrame:
+def jsonld_blocks(df: DataFrame) -> DataFrame:
     """Schema.org structured-data tier: (url, html) -> one row per
     JSON-LD script block (url, block_idx, json). Field extraction is
     deliberately NOT in the kernel — downstream code uses the built-in
@@ -751,12 +667,7 @@ def jsonld_blocks(
     Spark-first split: Python only where the DOM walk demands it).
     Same zero-shuffle scan -> mapInPandas shape as the other
     extraction tiers."""
-    from .kernel import JSONLD_BLOCKS_SCHEMA, jsonld_blocks_kernel, salted_partition_key
-
-    sel = df.select("url", "html")
-    if num_partitions:
-        sel = sel.repartition(num_partitions, salted_partition_key(salt))
-    return sel.mapInPandas(jsonld_blocks_kernel, JSONLD_BLOCKS_SCHEMA)
+    return df.select("url", "html").mapInPandas(jsonld_blocks_kernel, JSONLD_BLOCKS_SCHEMA)
 
 
 def extraction_report(out: DataFrame) -> DataFrame:

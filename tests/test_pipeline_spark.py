@@ -7,8 +7,11 @@ import os
 
 import pytest
 
+from pyspark.sql.types import StructType
+
 from gocrd_spark import datagen
 from gocrd_spark.extract import extract_any_document, mets_records
+from gocrd_spark.kernel import EXTRACTED_SCHEMA, PAGE_META_SCHEMA
 from gocrd_spark.pipeline import (
     committed_groups,
     extract_pages,
@@ -354,6 +357,34 @@ class TestResume:
         with pytest.raises(ValueError, match="resume mismatch"):
             run_extract_job(spark, inp, out, n_groups=4, salt=7)
 
+    @pytest.mark.parametrize("first", [False, True])
+    def test_resume_rejects_different_metadata(self, spark, pages, tmp_path, first):
+        """A resume that flips with_metadata would leave meta/ without
+        the groups committed before it (or partial); it must refuse."""
+        import json
+
+        inp = self._write_input(spark, pages, tmp_path)
+        out = str(tmp_path / "out_meta")
+        with pytest.raises(Exception, match="injected failure"):
+            run_extract_job(spark, inp, out, n_groups=4, fail_group=3,
+                            with_metadata=first)
+        assert committed_groups(out)  # some groups were committed
+        with pytest.raises(ValueError, match="resume mismatch"):
+            run_extract_job(spark, inp, out, n_groups=4, with_metadata=not first)
+        if first:
+            return
+        # a manifest written before with_metadata was pinned reads as False
+        manifest = os.path.join(out, "_commits", "manifest.json")
+        with open(manifest) as fh:
+            layout = json.load(fh)
+        del layout["with_metadata"]
+        with open(manifest, "w") as fh:
+            json.dump(layout, fh)
+        with pytest.raises(ValueError, match="resume mismatch"):
+            run_extract_job(spark, inp, out, n_groups=4, with_metadata=True)
+        run_extract_job(spark, inp, out, n_groups=4)
+        assert committed_groups(out) == set(range(4))
+
     def test_counters(self, spark, pages, tmp_path):
         inp = self._write_input(spark, pages, tmp_path)
         out = str(tmp_path / "out3")
@@ -362,6 +393,7 @@ class TestResume:
         assert summary["ok_rows"] + summary["err_rows"] == N_DOCS
         assert summary["err_rows"] >= 1
         assert summary["bytes_in"] > summary["bytes_out"] > 0
+        assert read_extracted(spark, out).drop("g").schema == EXTRACTED_SCHEMA
 
     def test_marker_bytes_equal_group_octet_lengths(self, spark, pages, tmp_path):
         """Each commit marker's bytes_in is its group's summed
@@ -409,6 +441,9 @@ class TestJobMetadataSideTable:
 
         got = read_metadata(spark, out).drop("g").cache()
         want = page_metadata(pages).drop("warc_ts_epoch")
+        assert got.schema == StructType(
+            [f for f in PAGE_META_SCHEMA.fields if f.name != "warc_ts_epoch"]
+        )
         assert got.count() == pages.count()
         assert got.exceptAll(want).count() == 0
         assert want.exceptAll(got).count() == 0
@@ -420,6 +455,54 @@ class TestJobMetadataSideTable:
         again = run_extract_job(spark, inp, out, n_groups=4, with_metadata=True)
         assert again["groups_committed_this_run"] == 0
         assert read_metadata(spark, out).count() == pages.count()
+
+
+class TestExtractJobCli:
+    def test_cli_runs_in_the_callers_session(self, spark, pages, tmp_path):
+        """The spark-submit CLI prints the summary its group markers add
+        up to, writes meta/ under --with-metadata, exits 2 on a bad
+        --ts-start, and leaves the caller's session running."""
+        import contextlib
+        import io
+        import json
+
+        from gocrd_spark.jobs import extract_job
+        from gocrd_spark.pipeline import read_commit_stats, read_metadata
+
+        inp = str(tmp_path / "pages_in")
+        pages.write.parquet(inp)
+        out = str(tmp_path / "out")
+        # the job's get_spark sets its defaults on the session it reuses
+        shuffle = spark.conf.get("spark.sql.shuffle.partitions")
+        buf = io.StringIO()
+        try:
+            with contextlib.redirect_stdout(buf):
+                assert extract_job.main([
+                    "--input", inp, "--output", out,
+                    "--n-groups", "4", "--with-metadata",
+                ]) == 0
+            with pytest.raises(SystemExit) as bad:
+                extract_job.main([
+                    "--input", inp, "--output", str(tmp_path / "bad"),
+                    "--ts-start", "not-a-timestamp",
+                ])
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+        assert bad.value.code == 2
+
+        summary = json.loads(buf.getvalue().strip().splitlines()[-1])
+        markers = read_commit_stats(out)
+        assert summary == {
+            "groups_committed_this_run": len(markers),
+            "groups_previously_done": 0,
+            **{
+                k: sum(m[k] for m in markers)
+                for k in ("input_rows", "ok_rows", "err_rows", "bytes_in", "bytes_out")
+            },
+        }
+        assert len(markers) == 4 and summary["input_rows"] == N_DOCS
+        assert read_metadata(spark, out).count() == N_DOCS
+        assert spark.range(3).count() == 3
 
 
 def test_page_metadata_null_warc_ts(spark):
