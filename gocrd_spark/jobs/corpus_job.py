@@ -66,11 +66,10 @@ def main(argv: list[str] | None = None) -> int:
     from gocrd_spark.operators.compose import training_corpus
     from gocrd_spark.session import get_spark
 
-    # only stop a session this job created — under pytest (or any host
-    # process with a live session) getOrCreate returns the caller's
-    # session, which must survive the call
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(master=args.master, app_name="gocrd-corpus")
+    # a host process's live session is used as it is (get_spark would
+    # apply its defaults to it) and left running
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark(master=args.master, app_name="gocrd-corpus")
     out = None
     try:
         docs = spark.read.parquet(args.input)
@@ -117,7 +116,7 @@ def main(argv: list[str] | None = None) -> int:
     finally:
         if out is not None:
             out.unpersist(blocking=False)
-        if owns_session:
+        if active is None:
             spark.stop()
 
 

@@ -50,10 +50,10 @@ def main(argv: list[str] | None = None) -> int:
     from gocrd_spark.pipeline import run_extract_job
     from gocrd_spark.session import get_spark
 
-    # only stop a session this job created: a host process with a live
-    # session gets it back from getOrCreate, and it must survive the call
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(master=args.master, app_name="gocrd-extract")
+    # a host process's live session is used as it is (get_spark would
+    # apply its defaults to it) and left running
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark(master=args.master, app_name="gocrd-extract")
     try:
         summary = run_extract_job(
             spark,
@@ -69,7 +69,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(summary))
         return 0
     finally:
-        if owns_session:
+        if active is None:
             spark.stop()
 
 

@@ -48,11 +48,12 @@ def main(argv: list[str] | None = None) -> int:
     from gocrd_spark.session import get_spark
     from gocrd_spark.streaming.ingest_dedup import ingested_pairs, run_ingest_dedup
 
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(master=args.master, app_name="gocrd-ingest")
+    # a host process's live session is used as it is (get_spark would
+    # apply its defaults to it) and left running
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark(master=args.master, app_name="gocrd-ingest")
     try:
-        table_exists = fsio.exists(spark, f"{args.table.rstrip('/')}/_PARAMS.json")
-        if not table_exists:
+        if not fsio.is_built(spark, args.table):
             if args.seed_docs is None:
                 parser.error(
                     f"no table at {args.table}; pass --seed-docs to build one"
@@ -78,7 +79,7 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps({"pairs_total": n_pairs, "table": args.table}))
         return 0
     finally:
-        if owns_session:
+        if active is None:
             spark.stop()
 
 

@@ -51,10 +51,10 @@ def main(argv: list[str] | None = None) -> int:
     from gocrd_spark.operators import sketch
     from gocrd_spark.session import get_spark
 
-    # only stop a session this job created: a host process with a live
-    # session gets it back from getOrCreate, and it must survive the call
-    owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(app_name=f"gocrd-profile-{args.cmd}")
+    # a host process's live session is used as it is (get_spark would
+    # apply its defaults to it) and left running
+    active = SparkSession.getActiveSession()
+    spark = active or get_spark(app_name=f"gocrd-profile-{args.cmd}")
     try:
         if args.cmd == "build":
             docs = spark.read.parquet(args.input)
@@ -92,7 +92,7 @@ def main(argv: list[str] | None = None) -> int:
                 }
             print(json.dumps(out, sort_keys=True))
     finally:
-        if owns_session:
+        if active is None:
             spark.stop()
     return 0
 

@@ -35,6 +35,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from gocrd_spark import fsio
+
 
 def _norm_text(col: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
@@ -1022,94 +1024,33 @@ def simhash_signatures(
     expensive signatures one time, then any number of near-dup queries
     (today's and next month's incremental runs) join against the table.
 
-    Write-once/resume semantics like the extraction commit log: if the
-    parquet _SUCCESS marker already exists the write is SKIPPED — a
-    restarted job reuses the finished table instead of recomputing
-    signatures. A ``_PARAMS.json`` sidecar pins (n, max_hamming); reads
-    through :func:`simhash_near_dups_from` refuse a parameter mismatch
-    rather than silently joining bands built for a different radius.
-
-    Marker/sidecar IO goes through the Hadoop FileSystem API resolved
-    from the path's scheme (:mod:`gocrd_spark.fsio`), so write-once /
-    param-pin / resume semantics hold on any filesystem Spark can
-    reach — local paths, ``file://``, ``hdfs://``, and object stores
-    once their connector jars are present.
-
-    Returns ``path``.
+    Write-once under the :mod:`gocrd_spark.fsio` protocol, pinning
+    (n, max_hamming): a re-run skips the build, and reads through
+    :func:`simhash_near_dups_from` refuse a radius mismatch rather than
+    silently joining bands built for a different radius. Returns
+    ``path``.
     """
-    import json
-
-    from gocrd_spark import fsio
-
-    spark = docs.sparkSession
-    params = {"n": n, "max_hamming": max_hamming, "version": 1}
-    marker = f"{path.rstrip('/')}/_SUCCESS"
-    sidecar = f"{path.rstrip('/')}/_PARAMS.json"
-    # sidecar written LAST: marker-without-sidecar = crash between the
-    # parquet commit and the params pin -> rebuild, don't die forever
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing != params:
-            raise ValueError(
-                f"existing signature table at {path} was built with "
-                f"{existing}, requested {params}"
-            )
-        return path
-    _banded_signatures(docs, n, max_hamming).write.mode("overwrite").parquet(path)
-    fsio.write_text(spark, sidecar, json.dumps(params))
+    fsio.build_once(
+        docs.sparkSession,
+        path,
+        {"n": n, "max_hamming": max_hamming, "version": 1},
+        lambda: _banded_signatures(docs, n, max_hamming)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
     return path
 
 
-def _load_sig_params(spark, path: str) -> dict:
-    import json
-
-    from gocrd_spark import fsio
-
-    return json.loads(fsio.read_text(spark, f"{path.rstrip('/')}/_PARAMS.json"))
-
-
-def _read_sig_table(spark, path: str) -> DataFrame:
-    """Read a durable signature table INCLUDING committed batch
-    appends: the base parquet at ``path`` plus every batch folded in by
-    :func:`simhash_append`/:func:`minhash_append`. Batch data lives
-    under ``path/_batches/<id>/`` — the leading underscore hides it
-    from Spark's file listing of the base dir, so each committed batch
-    is added explicitly from its ``_batch_<id>.json`` commit marker;
-    a batch dir without its marker (crash mid-append) is invisible,
-    which is what makes the append idempotent/re-runnable."""
-    import json
-
-    from gocrd_spark import fsio
-
-    dirs = [path]
-    for marker in fsio.glob(spark, f"{path.rstrip('/')}/_batch_*.json"):
-        dirs.append(json.loads(fsio.read_text(spark, marker))["dir"])
-    return spark.read.parquet(*dirs)
-
-
-def _append_sig_batch(banded: DataFrame, path: str, batch_id: str) -> str:
-    """Shared fold-in machinery (VERDICT r03 #5): write ``banded`` to
-    ``path/_batches/<batch_id>/`` then commit it with a
-    ``_batch_<batch_id>.json`` marker — marker written LAST, so a crash
-    between the parquet write and the marker leaves the batch invisible
-    and the re-run simply overwrites it (idempotent, resume-safe; the
-    same write-then-mark shape as the extraction commit log). A batch
-    whose marker already exists is skipped without recompute."""
-    import json
-    import re
-
-    from gocrd_spark import fsio
-
-    if not re.fullmatch(r"[A-Za-z0-9_.-]+", batch_id):
-        raise ValueError(f"batch_id must be filesystem-safe, got {batch_id!r}")
-    spark = banded.sparkSession
-    marker = f"{path.rstrip('/')}/_batch_{batch_id}.json"
-    if fsio.exists(spark, marker):
-        return path
-    bdir = f"{path.rstrip('/')}/_batches/{batch_id}"
-    banded.write.mode("overwrite").parquet(bdir)
-    fsio.write_text(spark, marker, json.dumps({"batch_id": batch_id, "dir": bdir}))
-    return path
+def _banded_params(spark, path: str, max_hamming: int) -> dict:
+    """The signature table's pinned params, refusing a radius other
+    than the one its bands were built for."""
+    params = fsio.read_params(spark, path)
+    if params["max_hamming"] != max_hamming:
+        raise ValueError(
+            f"signature table at {path} banded for max_hamming="
+            f"{params['max_hamming']}, requested {max_hamming}"
+        )
+    return params
 
 
 def simhash_append(new_docs: DataFrame, path: str, batch_id: str) -> str:
@@ -1119,15 +1060,16 @@ def simhash_append(new_docs: DataFrame, path: str, batch_id: str) -> str:
     :func:`simhash_incremental`: run the increment query, report its
     pairs, then ``simhash_append(new_docs, path, batch_id)`` so the
     NEXT increment sees this batch without recomputing it. Re-running
-    with the same ``batch_id`` is a no-op (commit marker), so the daily
-    job stays re-runnable end to end. Banding params come from the
-    table's ``_PARAMS.json``. Returns ``path``."""
-    params = _load_sig_params(new_docs.sparkSession, path)
-    return _append_sig_batch(
+    with the same ``batch_id`` is a no-op (:func:`fsio.append_batch`),
+    so the daily job stays re-runnable end to end. Banding params come
+    from the table's pin. Returns ``path``."""
+    params = fsio.read_params(new_docs.sparkSession, path)
+    fsio.append_batch(
         _banded_signatures(new_docs, params["n"], params["max_hamming"]),
         path,
         batch_id,
     )
+    return path
 
 
 def simhash_near_dups_from(
@@ -1137,16 +1079,13 @@ def simhash_near_dups_from(
     max_bucket: int | None = 10_000,
 ) -> DataFrame:
     """Near-dup pairs from a durable signature table written by
-    :func:`simhash_signatures` — validates the _PARAMS.json radius, then
+    :func:`simhash_signatures` — validates the pinned radius, then
     runs the same band-bucket join + hamming filter as
     simhash_near_dups, with the signature cost already paid."""
-    params = _load_sig_params(spark, path)
-    if params["max_hamming"] != max_hamming:
-        raise ValueError(
-            f"signature table at {path} banded for max_hamming="
-            f"{params['max_hamming']}, requested {max_hamming}"
-        )
-    return _pairs_from_banded(_read_sig_table(spark, path), max_hamming, max_bucket)
+    _banded_params(spark, path, max_hamming)
+    return _pairs_from_banded(
+        fsio.read_batches(spark, path), max_hamming, max_bucket
+    )
 
 
 def simhash_incremental(
@@ -1165,23 +1104,18 @@ def simhash_incremental(
     |new| × bucket density, not with the corpus.
 
     Signature params (n, max_hamming → banding) come from the table's
-    _PARAMS.json sidecar; a radius mismatch refuses like
+    pin; a radius mismatch refuses like
     simhash_near_dups_from. Returns (doc_a, doc_b, hamming) with
     doc_a < doc_b. The returned plan does not mutate the table —
     increments stay idempotent/re-runnable; fold the batch in for the
     NEXT increment with :func:`simhash_append` (commit-marker
     idempotent) after consuming the pairs."""
-    params = _load_sig_params(new_docs.sparkSession, path)
-    if params["max_hamming"] != max_hamming:
-        raise ValueError(
-            f"signature table at {path} banded for max_hamming="
-            f"{params['max_hamming']}, requested {max_hamming}"
-        )
     spark = new_docs.sparkSession
+    params = _banded_params(spark, path, max_hamming)
     new_chunks = _banded_signatures(
         new_docs, params["n"], max_hamming
     ).localCheckpoint(eager=False)
-    old_chunks = _read_sig_table(spark, path)
+    old_chunks = fsio.read_batches(spark, path)
     all_chunks = old_chunks.unionByName(new_chunks)
     if max_bucket is not None:
         # cap on the COMBINED bucket population — a key that was fine
@@ -1425,32 +1359,18 @@ def minhash_signatures(
     any number of later candidate queries (or daily increments via
     :func:`minhash_incremental`) join against the table.
 
-    Write-once/resume + ``_PARAMS.json`` (n, num_hashes, bands) pin,
-    refusing a parameter mismatch — the same contract as the SimHash
-    table and the IVF index, with scheme-agnostic marker/sidecar IO via
-    the Hadoop FileSystem API (see :func:`simhash_signatures`). Returns
-    ``path``.
+    Write-once under the :mod:`gocrd_spark.fsio` protocol, pinning
+    (n, num_hashes, bands) and refusing a mismatch. Returns ``path``.
     """
-    import json
-
-    from gocrd_spark import fsio
-
     _guard_banding(num_hashes, bands, allow_quadratic)
-    spark = docs.sparkSession
-    params = {"n": n, "num_hashes": num_hashes, "bands": bands, "version": 1}
-    marker = f"{path.rstrip('/')}/_SUCCESS"
-    sidecar = f"{path.rstrip('/')}/_PARAMS.json"
-    # sidecar written LAST: marker-without-sidecar = crashed build -> rebuild
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing != params:
-            raise ValueError(
-                f"existing MinHash table at {path} was built with "
-                f"{existing}, requested {params}"
-            )
-        return path
-    _minhash_banded(docs, n, num_hashes, bands).write.mode("overwrite").parquet(path)
-    fsio.write_text(spark, sidecar, json.dumps(params))
+    fsio.build_once(
+        docs.sparkSession,
+        path,
+        {"n": n, "num_hashes": num_hashes, "bands": bands, "version": 1},
+        lambda: _minhash_banded(docs, n, num_hashes, bands)
+        .write.mode("overwrite")
+        .parquet(path),
+    )
     return path
 
 
@@ -1471,18 +1391,18 @@ def minhash_incremental(
     new) — verification joins only the candidate docs' shingle hashes,
     O(|candidates|).
 
-    Banding params come from the table's ``_PARAMS.json``; returns
+    Banding params come from the table's pin; returns
     (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard >= threshold.
     The plan never mutates the table (increments stay idempotent/
     re-runnable); fold the batch in for the next increment with
     :func:`minhash_append` after consuming the pairs.
     """
     spark = new_docs.sparkSession
-    params = _load_sig_params(spark, path)
+    params = fsio.read_params(spark, path)
     new_banded = _minhash_banded(
         new_docs, params["n"], params["num_hashes"], params["bands"]
     ).localCheckpoint(eager=False)
-    all_banded = _read_sig_table(spark, path).unionByName(new_banded)
+    all_banded = fsio.read_batches(spark, path).unionByName(new_banded)
     candidates = (
         new_banded.alias("x")
         .join(all_banded.alias("y"), ["band", "bucket"])
@@ -1501,15 +1421,16 @@ def minhash_append(new_docs: DataFrame, path: str, batch_id: str) -> str:
     the durable table at ``path`` — the MinHash twin of
     :func:`simhash_append` (same commit-marker machinery, same
     run-increment-then-append daily shape). Banding params come from
-    the table's ``_PARAMS.json``. Returns ``path``."""
-    params = _load_sig_params(new_docs.sparkSession, path)
-    return _append_sig_batch(
+    the table's pin. Returns ``path``."""
+    params = fsio.read_params(new_docs.sparkSession, path)
+    fsio.append_batch(
         _minhash_banded(
             new_docs, params["n"], params["num_hashes"], params["bands"]
         ),
         path,
         batch_id,
     )
+    return path
 
 
 def dedup_report(clusters: DataFrame) -> DataFrame:

@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gocrd_spark import fsio
+
 
 def _tokens(col: Column) -> Column:
     """Lowercased non-empty whitespace tokens (Java ``\\s`` is
@@ -292,55 +294,40 @@ def search_index(
     ``tbucket = pmod(xxhash64(term), buckets)``, so a query's scan
     reads only its terms' buckets via storage-level partition pruning
     (a 2-term query on a 64-bucket index touches <= 2/64 of the
-    postings bytes). Corpus scalars (n_docs, t_tokens) are computed at
-    build time and pinned EXACTLY in ``_PARAMS.json`` alongside the
-    bucket count — same write-once/resume/refuse-on-mismatch contract
-    as the signature tables, scheme-agnostic via the Hadoop FS API.
+    postings bytes). Write-once under the :mod:`gocrd_spark.fsio`
+    protocol, pinning ``buckets`` and ``text_col`` (an index pinned
+    without ``text_col`` was built from ``"text"``); the corpus scalars
+    (n_docs, t_tokens) are computed at build time and pinned EXACTLY
+    beside them.
 
     Layout: ``path/postings/tbucket=*/`` (term, doc_id, tf, df),
     ``path/dl/`` (doc_id, dl). Returns ``path``.
     """
-    import json
+    root = path.rstrip("/")
 
-    from gocrd_spark import fsio
+    def build() -> dict:
+        scal = docs.select(
+            F.count(F.lit(1)).cast("long").alias("n_docs"),
+            F.sum(F.size(_tokens(F.col(text_col)))).cast("long").alias("t_tokens"),
+        ).collect()[0]
+        (
+            postings_flat(docs, text_col)
+            .withColumn("tbucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int"))
+            .write.mode("overwrite")
+            .partitionBy("tbucket")
+            .parquet(f"{root}/postings")
+        )
+        docs.select(
+            F.col("doc_id"), F.size(_tokens(F.col(text_col))).cast("long").alias("dl")
+        ).write.mode("overwrite").parquet(f"{root}/dl")
+        return {"n_docs": int(scal["n_docs"]), "t_tokens": int(scal["t_tokens"])}
 
-    spark = docs.sparkSession
-    marker = f"{path.rstrip('/')}/_SUCCESS"
-    sidecar = f"{path.rstrip('/')}/_PARAMS.json"
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing.get("buckets") != buckets or existing.get("version") != 1:
-            raise ValueError(
-                f"existing search index at {path} was built with {existing}, "
-                f"requested buckets={buckets}"
-            )
-        return path
-    scal = docs.select(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size(_tokens(F.col(text_col)))).cast("long").alias("t_tokens"),
-    ).collect()[0]
-    (
-        postings_flat(docs, text_col)
-        .withColumn("tbucket", F.pmod(F.xxhash64("term"), F.lit(buckets)).cast("int"))
-        .write.mode("overwrite")
-        .partitionBy("tbucket")
-        .parquet(f"{path.rstrip('/')}/postings")
-    )
-    docs.select(
-        F.col("doc_id"), F.size(_tokens(F.col(text_col))).cast("long").alias("dl")
-    ).write.mode("overwrite").parquet(f"{path.rstrip('/')}/dl")
-    fsio.write_text(spark, marker, "")
-    fsio.write_text(
-        spark,
-        sidecar,
-        json.dumps(
-            {
-                "buckets": buckets,
-                "n_docs": int(scal["n_docs"]),
-                "t_tokens": int(scal["t_tokens"]),
-                "version": 1,
-            }
-        ),
+    fsio.build_once(
+        docs.sparkSession,
+        path,
+        {"buckets": buckets, "text_col": text_col, "version": 1},
+        build,
+        legacy={"text_col": "text"},
     )
     return path
 
@@ -356,11 +343,7 @@ def bm25_topk_from(
     themselves (both predicates reach the parquet scan). The dl join
     touches only matched postings.
     """
-    import json
-
-    from gocrd_spark import fsio
-
-    params = json.loads(fsio.read_text(spark, f"{path.rstrip('/')}/_PARAMS.json"))
+    params = fsio.read_params(spark, path)
     buckets, n_docs, t_tokens = params["buckets"], params["n_docs"], params["t_tokens"]
     q = queries.select(
         "query_id",

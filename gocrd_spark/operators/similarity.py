@@ -26,6 +26,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gocrd_spark import fsio
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -670,56 +672,38 @@ def ivf_index(
 ) -> str:
     """Materialize the IVF index ONCE at ``path`` — the durable,
     serving-scale counterpart of :func:`topk_ivf` (which re-trains the
-    quantizer per call), mirroring the simhash_signatures write-once
-    contract:
+    quantizer per call):
 
     - ``centroids/``  (cell, centroid) parquet — the coarse quantizer;
     - ``corpus/``     (vec_id, embedding) parquet PARTITIONED BY cell —
       the inverted lists ARE parquet partitions, so probing n_probe of
       n_cells cells is literal partition pruning: a query batch reads
       ~n_probe/n_cells of the corpus bytes off storage, which is the
-      entire point of IVF at 10^12 vectors;
-    - ``_PARAMS.json`` pins (n_cells, n_iters); a resume with different
-      params refuses rather than probing a mismatched quantizer.
+      entire point of IVF at 10^12 vectors.
 
-    If the corpus ``_SUCCESS`` marker exists the build is SKIPPED
-    (write-once/resume, like the extraction commit log). Marker/sidecar
-    IO goes through the Hadoop FileSystem API resolved from the path's
-    scheme (:mod:`gocrd_spark.fsio`), so the write-once/param-pin
-    contract holds on any filesystem Spark can reach. Returns path.
+    Write-once under the :mod:`gocrd_spark.fsio` protocol, pinning
+    (n_cells, n_iters): a re-run skips the build, and a different
+    request refuses rather than probe a mismatched quantizer. Returns
+    path.
     """
-    import json
-
-    from gocrd_spark import fsio
-
     spark = embeddings.sparkSession
-    params = {"n_cells": n_cells, "n_iters": n_iters, "version": 1}
     base = path.rstrip("/")
-    marker = f"{base}/corpus/_SUCCESS"
-    sidecar = f"{base}/_PARAMS.json"
-    # the sidecar is written LAST, so marker-without-sidecar means a
-    # crash between the parquet commit and the params pin: rebuild
-    # (mode=overwrite clears the partial state) instead of dying on a
-    # missing file forever
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing != params:
-            raise ValueError(
-                f"existing IVF index at {path} was built with "
-                f"{existing}, requested {params}"
-            )
-        return path
-    cent = kmeans_centroids_df(embeddings, n_cells, n_iters)
-    cent.write.mode("overwrite").parquet(f"{base}/centroids")
-    cent_back = spark.read.parquet(f"{base}/centroids")
-    (
-        assign_cells(embeddings, cent_back, carry=("embedding",))
-        .select("vec_id", "embedding", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{base}/corpus")
+
+    def build() -> None:
+        cent = kmeans_centroids_df(embeddings, n_cells, n_iters)
+        cent.write.mode("overwrite").parquet(f"{base}/centroids")
+        cent_back = spark.read.parquet(f"{base}/centroids")
+        (
+            assign_cells(embeddings, cent_back, carry=("embedding",))
+            .select("vec_id", "embedding", "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(f"{base}/corpus")
+        )
+
+    fsio.build_once(
+        spark, path, {"n_cells": n_cells, "n_iters": n_iters, "version": 1}, build
     )
-    fsio.write_text(spark, sidecar, json.dumps(params))
     return path
 
 
@@ -1182,9 +1166,8 @@ def ivfpq_index(
     pq_iters: int = 2,
 ) -> str:
     """Materialize the IVF-PQ index ONCE at ``path`` — the durable
-    counterpart of :func:`ivfpq_topk`, same write-once/param-pin/resume
-    contract as :func:`ivf_index` (Hadoop-FS sidecar IO, sidecar
-    written LAST so a crash between commit and pin rebuilds):
+    counterpart of :func:`ivfpq_topk`, write-once under the
+    :mod:`gocrd_spark.fsio` protocol with all five parameters pinned:
 
     - ``centroids/``  (cell, centroid) — the coarse quantizer;
     - ``codebooks/``  (sub, code, centroid) — residual PQ codebooks;
@@ -1195,10 +1178,6 @@ def ivfpq_index(
 
     Returns path.
     """
-    import json
-
-    from gocrd_spark import fsio
-
     spark = embeddings.sparkSession
     params = {
         "n_cells": n_cells,
@@ -1209,49 +1188,42 @@ def ivfpq_index(
         "version": 1,
     }
     base = path.rstrip("/")
-    marker = f"{base}/codes/_SUCCESS"
-    sidecar = f"{base}/_PARAMS.json"
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing != params:
-            raise ValueError(
-                f"existing IVF-PQ index at {path} was built with "
-                f"{existing}, requested {params}"
+
+    def build() -> None:
+        cent = kmeans_centroids_df(embeddings, n_cells, coarse_iters)
+        cent.write.mode("overwrite").parquet(f"{base}/centroids")
+        cent_back = spark.read.parquet(f"{base}/centroids")
+        # pinned for the same multi-consumer reason as in ivfpq_topk; the
+        # embedding rides through the fold and the cell through the encode,
+        # so neither corpus-sized vec_id re-join exists
+        residuals = (
+            assign_cells(embeddings, cent_back, carry=("embedding",))
+            .join(F.broadcast(cent_back), "cell")
+            .select(
+                "vec_id",
+                "cell",
+                F.zip_with(
+                    F.transform("embedding", lambda v: v.cast("double")),
+                    "centroid",
+                    lambda x, y: x - y,
+                ).alias("embedding"),
             )
-        return path
-    cent = kmeans_centroids_df(embeddings, n_cells, coarse_iters)
-    cent.write.mode("overwrite").parquet(f"{base}/centroids")
-    cent_back = spark.read.parquet(f"{base}/centroids")
-    # pinned for the same multi-consumer reason as in ivfpq_topk; the
-    # embedding rides through the fold and the cell through the encode,
-    # so neither corpus-sized vec_id re-join exists
-    residuals = (
-        assign_cells(embeddings, cent_back, carry=("embedding",))
-        .join(F.broadcast(cent_back), "cell")
-        .select(
-            "vec_id",
-            "cell",
-            F.zip_with(
-                F.transform("embedding", lambda v: v.cast("double")),
-                "centroid",
-                lambda x, y: x - y,
-            ).alias("embedding"),
+            .localCheckpoint(eager=False)
         )
-        .localCheckpoint(eager=False)
-    )
-    cb = pq_codebooks(
-        residuals.select("vec_id", "embedding"), m, n_codes, pq_iters
-    ).localCheckpoint(eager=False)
-    cb.write.mode("overwrite").parquet(f"{base}/codebooks")
-    cb_back = spark.read.parquet(f"{base}/codebooks")
-    (
-        pq_encode(residuals, cb_back, m, extra=("cell",))
-        .select("vec_id", "sub", "code", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(f"{base}/codes")
-    )
-    fsio.write_text(spark, sidecar, json.dumps(params))
+        cb = pq_codebooks(
+            residuals.select("vec_id", "embedding"), m, n_codes, pq_iters
+        ).localCheckpoint(eager=False)
+        cb.write.mode("overwrite").parquet(f"{base}/codebooks")
+        cb_back = spark.read.parquet(f"{base}/codebooks")
+        (
+            pq_encode(residuals, cb_back, m, extra=("cell",))
+            .select("vec_id", "sub", "code", "cell")
+            .write.mode("overwrite")
+            .partitionBy("cell")
+            .parquet(f"{base}/codes")
+        )
+
+    fsio.build_once(spark, path, params, build)
     return path
 
 
@@ -1273,12 +1245,8 @@ def ivfpq_topk_from(
     probe list into a storage-level partition filter — unprobed
     inverted lists are never read. Results are identical to
     :func:`ivfpq_topk` at the same params (parity pytest-gated)."""
-    import json
-
-    from gocrd_spark import fsio
-
     base = path.rstrip("/")
-    params = json.loads(fsio.read_text(spark, f"{base}/_PARAMS.json"))
+    params = fsio.read_params(spark, path)
     cent = spark.read.parquet(f"{base}/centroids")
     cb = spark.read.parquet(f"{base}/codebooks")
     codes = spark.read.parquet(f"{base}/codes")

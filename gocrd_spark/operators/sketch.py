@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from gocrd_spark import fsio
+
 HLL_P = 10
 HLL_M = 1 << HLL_P  # 1024 registers
 HLL_RHO_CAP = 32
@@ -337,14 +339,20 @@ def _profile_tables(docs: DataFrame, group_col: str) -> dict[str, DataFrame]:
     }
 
 
+def _profile_params(group_col: str) -> dict:
+    return {**PROFILE_PARAMS, "group_col": group_col}
+
+
+# a profile pinned without group_col was grouped by the default column
+_PROFILE_LEGACY = {"group_col": "source"}
+
+
 def profile_build(docs: DataFrame, path: str, group_col: str = "source") -> str:
     """Materialize the corpus profile ONCE at ``path``: the three
     bounded sketch tables (``hll`` registers, ``cms`` counters, ``hdr``
-    doc-length buckets) under one root with a ``_PARAMS.json`` pin —
-    the same write-once/resume/refuse-on-mismatch contract as the
-    MinHash/SimHash signature tables and the IVF index
-    (dedup.minhash_signatures), scheme-agnostic via the Hadoop
-    FileSystem API (fsio). Returns ``path``.
+    doc-length buckets) under one root, write-once under the
+    :mod:`gocrd_spark.fsio` protocol with ``PROFILE_PARAMS`` and
+    ``group_col`` pinned. Returns ``path``.
 
     This is what replaces "re-scan 100 TB to answer corpus questions":
     distinct-vocabulary, term-frequency, and length-distribution
@@ -352,58 +360,36 @@ def profile_build(docs: DataFrame, path: str, group_col: str = "source") -> str:
     crawls fold in via :func:`profile_append` without re-reading
     history.
     """
-    import json
 
-    from gocrd_spark import fsio
+    def build() -> None:
+        for name, df in _profile_tables(docs, group_col).items():
+            df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{name}")
 
-    spark = docs.sparkSession
-    marker = f"{path.rstrip('/')}/_SUCCESS"
-    sidecar = f"{path.rstrip('/')}/_PARAMS.json"
-    if fsio.exists(spark, marker) and fsio.exists(spark, sidecar):
-        existing = json.loads(fsio.read_text(spark, sidecar))
-        if existing != PROFILE_PARAMS:
-            raise ValueError(
-                f"existing profile at {path} was built with {existing}, "
-                f"requested {PROFILE_PARAMS}"
-            )
-        return path
-    for name, df in _profile_tables(docs, group_col).items():
-        df.write.mode("overwrite").parquet(f"{path.rstrip('/')}/{name}")
-    fsio.write_text(spark, marker, "")
-    fsio.write_text(spark, sidecar, json.dumps(PROFILE_PARAMS))
+    fsio.build_once(
+        docs.sparkSession, path, _profile_params(group_col), build, _PROFILE_LEGACY
+    )
     return path
 
 
 def profile_append(
     new_docs: DataFrame, path: str, batch_id: str, group_col: str = "source"
 ) -> str:
-    """Idempotently fold a new batch into the durable profile — the
-    sketch-family twin of dedup.minhash_append (same commit-marker
-    machinery per sub-table; re-running a batch_id is a no-op). The
-    merge law is the sketch's own: readers take max over HLL register
-    rows and sum over CMS/HDR count rows, so appending commutes and
-    never rewrites the base tables."""
-    import json
-
-    from gocrd_spark import fsio
-    from gocrd_spark.operators.dedup import _append_sig_batch
-
-    spark = new_docs.sparkSession
-    existing = json.loads(fsio.read_text(spark, f"{path.rstrip('/')}/_PARAMS.json"))
-    if existing != PROFILE_PARAMS:
-        raise ValueError(
-            f"profile at {path} was built with {existing}, "
-            f"this build writes {PROFILE_PARAMS}"
-        )
+    """Idempotently fold a new batch into the durable profile: one
+    :func:`fsio.append_batch` per sub-table, so re-running a batch_id
+    is a no-op. The pin must match this build's ``PROFILE_PARAMS`` and
+    ``group_col``. The merge law is the sketch's own: readers take max
+    over HLL register rows and sum over CMS/HDR count rows, so
+    appending commutes and never rewrites the base tables."""
+    fsio.read_params(
+        new_docs.sparkSession, path, _profile_params(group_col), _PROFILE_LEGACY
+    )
     for name, df in _profile_tables(new_docs, group_col).items():
-        _append_sig_batch(df, f"{path.rstrip('/')}/{name}", batch_id)
+        fsio.append_batch(df, f"{path.rstrip('/')}/{name}", batch_id)
     return path
 
 
 def _profile_read(spark, path: str, name: str) -> DataFrame:
-    from gocrd_spark.operators.dedup import _read_sig_table
-
-    return _read_sig_table(spark, f"{path.rstrip('/')}/{name}")
+    return fsio.read_batches(spark, f"{path.rstrip('/')}/{name}")
 
 
 def profile_distinct(spark, path: str) -> DataFrame:

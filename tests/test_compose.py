@@ -114,8 +114,8 @@ class TestTrainingCorpusStarValve:
 class TestCorpusJobCli:
     def test_job_writes_sharded_output(self, spark, tmp_path, docs):
         """The spark-submit CLI runs the chain, partitions output by
-        shard_id, prints a summary, and refuses a finished output
-        without --overwrite."""
+        shard_id, prints a summary, leaves the caller's session confs as
+        they were, and refuses a finished output without --overwrite."""
         import json
 
         from gocrd_spark.jobs import corpus_job
@@ -131,9 +131,11 @@ class TestCorpusJobCli:
         import contextlib
         import io
 
+        shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             assert corpus_job.main(args) == 0
+        assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
         summary = json.loads(buf.getvalue().strip().splitlines()[-1])
         assert 0 < summary["kept_docs"] < summary["input_docs"]
         assert summary["shards"] > 1

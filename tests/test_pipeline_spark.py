@@ -461,7 +461,7 @@ class TestExtractJobCli:
     def test_cli_runs_in_the_callers_session(self, spark, pages, tmp_path):
         """The spark-submit CLI prints the summary its group markers add
         up to, writes meta/ under --with-metadata, exits 2 on a bad
-        --ts-start, and leaves the caller's session running."""
+        --ts-start, and leaves the caller's session running as it was."""
         import contextlib
         import io
         import json
@@ -472,23 +472,21 @@ class TestExtractJobCli:
         inp = str(tmp_path / "pages_in")
         pages.write.parquet(inp)
         out = str(tmp_path / "out")
-        # the job's get_spark sets its defaults on the session it reuses
         shuffle = spark.conf.get("spark.sql.shuffle.partitions")
         buf = io.StringIO()
-        try:
-            with contextlib.redirect_stdout(buf):
-                assert extract_job.main([
-                    "--input", inp, "--output", out,
-                    "--n-groups", "4", "--with-metadata",
-                ]) == 0
-            with pytest.raises(SystemExit) as bad:
-                extract_job.main([
-                    "--input", inp, "--output", str(tmp_path / "bad"),
-                    "--ts-start", "not-a-timestamp",
-                ])
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", shuffle)
+        with contextlib.redirect_stdout(buf):
+            assert extract_job.main([
+                "--input", inp, "--output", out,
+                "--n-groups", "4", "--with-metadata",
+            ]) == 0
+        with pytest.raises(SystemExit) as bad:
+            extract_job.main([
+                "--input", inp, "--output", str(tmp_path / "bad"),
+                "--ts-start", "not-a-timestamp",
+            ])
         assert bad.value.code == 2
+        # the job runs in the caller's session without changing its confs
+        assert spark.conf.get("spark.sql.shuffle.partitions") == shuffle
 
         summary = json.loads(buf.getvalue().strip().splitlines()[-1])
         markers = read_commit_stats(out)

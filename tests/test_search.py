@@ -222,6 +222,43 @@ def test_search_index_refuses_param_mismatch(spark, docs, tmp_path):
         search_index(docs, path, buckets=32)
 
 
+def test_search_index_pins_text_col(spark, docs, tmp_path):
+    """The index is built from ``text_col``, so a rebuild from another
+    column refuses instead of serving the old postings. An index pinned
+    without ``text_col`` (older sidecar, root ``_SUCCESS``) reads as
+    built from ``"text"``: it still resumes and serves."""
+    import json
+    import os
+
+    from gocrd_spark import fsio
+    from gocrd_spark.operators.search import bm25_topk_from, search_index
+
+    titled = docs.withColumn("title", docs["text"].substr(1, 9))
+    path = str(tmp_path / "idx3")
+    search_index(titled, path, buckets=16)
+    with pytest.raises(ValueError, match="was built with"):
+        search_index(titled, path, buckets=16, text_col="title")
+
+    # rewrite the index into the older on-disk format
+    sidecar = os.path.join(path, "_PARAMS.json")
+    pinned = json.loads(fsio.read_text(spark, sidecar))
+    del pinned["text_col"]
+    fsio.write_text(spark, sidecar, json.dumps(pinned))
+    fsio.write_text(spark, os.path.join(path, "_SUCCESS"), "")
+    mtime = os.stat(sidecar).st_mtime_ns
+    assert search_index(titled, path, buckets=16) == path
+    assert os.stat(sidecar).st_mtime_ns == mtime
+    with pytest.raises(ValueError, match="was built with"):
+        search_index(titled, path, buckets=16, text_col="title")
+
+    queries = spark.createDataFrame(
+        [(0, "spark"), (1, "query")], "query_id long, term string"
+    )
+    assert sorted(bm25_topk_from(spark, path, queries, k=5).collect()) == sorted(
+        bm25_topk(docs, queries, k=5).collect()
+    )
+
+
 def test_boolean_search_requires_all_terms(spark, docs):
     from gocrd_spark.operators.search import boolean_search
 

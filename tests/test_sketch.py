@@ -261,3 +261,50 @@ def test_profile_param_pin_refuses_mismatch(spark, tmp_path, monkeypatch):
         sketch.profile_build(_docs_df(spark, 0, 100), path)
     with pytest.raises(ValueError, match="built with"):
         sketch.profile_append(_docs_df(spark, 100, 200), path, "b1")
+
+
+def test_profile_pins_group_col(spark, tmp_path):
+    """The HLL/HDR ``group`` column is keyed on ``group_col``, so a
+    build or append with another column refuses instead of mixing
+    groupings. A profile in the older format (sidecar without
+    ``group_col``, root ``_SUCCESS``, batch markers carrying ``dir``)
+    reads as grouped by ``"source"``: it resumes, appends and serves."""
+    import json
+    import os
+
+    from gocrd_spark import fsio
+    from gocrd_spark.operators import sketch
+
+    path = str(tmp_path / "p3")
+    base = _docs_df(spark, 0, 300).withColumn("lane", F.lit("x"))
+    sketch.profile_build(base, path)
+    sketch.profile_append(_docs_df(spark, 300, 400), path, "b1")
+    with pytest.raises(ValueError, match="was built with"):
+        sketch.profile_build(base, path, group_col="lane")
+    with pytest.raises(ValueError, match="was built with"):
+        sketch.profile_append(base, path, "b2", group_col="lane")
+    assert not os.path.exists(os.path.join(path, "hll", "_batch_b2.json"))
+    want = sorted(sketch.profile_distinct(spark, path).collect())
+
+    # rewrite the profile into the older on-disk format
+    sidecar = os.path.join(path, "_PARAMS.json")
+    pinned = json.loads(fsio.read_text(spark, sidecar))
+    del pinned["group_col"]
+    fsio.write_text(spark, sidecar, json.dumps(pinned))
+    fsio.write_text(spark, os.path.join(path, "_SUCCESS"), "")
+    for name in ("hll", "cms", "hdr"):
+        bdir = os.path.join(path, name, "_batches", "b1")
+        fsio.write_text(spark, os.path.join(path, name, "_batch_b1.json"),
+                        json.dumps({"batch_id": "b1", "dir": bdir}))
+    mtime = os.stat(sidecar).st_mtime_ns
+    sketch.profile_build(base, path)
+    assert os.stat(sidecar).st_mtime_ns == mtime
+    assert sorted(sketch.profile_distinct(spark, path).collect()) == want
+    with pytest.raises(ValueError, match="was built with"):
+        sketch.profile_append(base, path, "b2", group_col="lane")
+    sketch.profile_append(_docs_df(spark, 400, 500), path, "b2")
+    merged = {r.group: r.est_distinct
+              for r in sketch.profile_distinct(spark, path).collect()}
+    assert merged == {r.group: r.est_distinct
+                      for r in sketch.hll_distinct_terms(
+                          _docs_df(spark, 0, 500)).collect()}

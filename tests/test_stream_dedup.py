@@ -391,11 +391,11 @@ class TestStreamingIngestDedup:
 
         # the durable table now covers seed + streamed docs (committed
         # batches live under _batches/, so read via the table reader)
-        from gocrd_spark.operators.dedup import _read_sig_table
+        from gocrd_spark.fsio import read_batches
 
         table_ids = {
             r.doc_id
-            for r in _read_sig_table(spark, table)
+            for r in read_batches(spark, table)
             .select("doc_id")
             .distinct()
             .collect()
@@ -407,7 +407,7 @@ class TestStreamingIngestDedup:
         # table gains nothing, and the PAIR SET is unchanged (the
         # retried batch may re-emit pairs against later docs into its
         # own output dir; consumers key pairs by (doc_a, doc_b))
-        n_table_rows = _read_sig_table(spark, table).count()
+        n_table_rows = read_batches(spark, table).count()
         retry = spark.createDataFrame(
             [self._doc(i, t) for i, t in [
                 (100, base + " mu"),
@@ -418,7 +418,7 @@ class TestStreamingIngestDedup:
             "doc_id long, ts timestamp, text string",
         )
         ingest_dedup_batch(retry, 0, table, store, pairs_dir, threshold=0.5)
-        assert _read_sig_table(spark, table).count() == n_table_rows
+        assert read_batches(spark, table).count() == n_table_rows
         pairs2 = {
             (r.doc_a, r.doc_b)
             for r in ingested_pairs(spark, pairs_dir).collect()
